@@ -3,8 +3,8 @@
 A from-scratch rebuild of the crawl/extract capabilities of the reference
 crawler (``luongkhdang/newscrawler``) as idiomatic Spark: batched
 frontier-expansion rounds over Common-Crawl-style page tables, a
-canonicalized-URL-hash seen set (broadcast bloom prefilter + exact
-anti-join), per-host politeness-budget priority windows with host-hash
+canonicalized-URL-hash seen set (bucketed bloom/cuckoo prefilter +
+exact anti-join), per-host politeness-budget priority windows with host-hash
 salted partitioning, robots.txt compliance via a broadcast rules join,
 and boilerplate-stripping text extraction in vectorized pandas/Arrow
 UDFs that is byte-identical per URL to the frozen contract extractor.

@@ -18,7 +18,8 @@ commits, exact resume).  Frontier state is re-read from the store each
 round, which also truncates Spark lineage across rounds.
 
 Scale shape (10^10 frontier, 1000 executors):
-  * the anti-join input is cut by the broadcast bloom (operators/seen);
+  * the anti-join input is cut by the bucketed seen filter
+    (operators/seen), built and applied on the executors;
   * the politeness window is salted two-phase (operators/politeness) so
     a hot host cannot serialize a stage;
   * the admitted set is budget-bounded (hosts × budget), so the fetch
@@ -30,6 +31,7 @@ Scale shape (10^10 frontier, 1000 executors):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 from dataclasses import dataclass
@@ -46,7 +48,13 @@ from .functions.robots import (
     robots_filter_map_in_pandas,
 )
 from .operators.politeness import admit_per_host, global_fetch_order
-from .operators.seen import anti_join_seen, build_bloom
+# build_bloom is unused here; perfbench's traced mode patches it in this namespace
+from .operators.seen import (  # noqa: F401
+    BloomBucketStore,
+    CuckooBucketStore,
+    anti_join_seen,
+    build_bloom,
+)
 from .plans.storage import RoundStore
 
 FRONTIER_SCHEMA = T.StructType(
@@ -81,23 +89,20 @@ class CrawlConfig:
     min_content_len: int = 40       # ref min-content gate (newspaper_scraper.py:39)
     max_links_per_page: int = 100   # ref link cap (scraper_gui.py:483-486)
     n_salts: int = 8
-    use_bloom: bool = True
     bloom_fpp: float = 1e-3
-    bloom_expected: int = 1_000_000  # sizes the cumulative bloom (fixed m)
-    bloom_buckets: int = 1  # >1 → partitioned bucket-aligned blooms
-    # (operators/seen.BloomBucketStore): one bitset per pmod(url_hash, B)
-    # bucket, built and applied on the executors with NO driver-assembled
-    # full bitset — the 10^10-seen shape (a single bloom at 10^10 keys is
-    # ~17 GB, SURVEY §7.3).  1 keeps the single broadcast bloom (fine to
-    # ~10^8 seen; cheapest at sandbox scale).
-    seen_filter: str = "bloom"  # "bloom" | "cuckoo" — the approximate
-    # seen-set structure (north star: "bloom/cuckoo-filter URL-seen
-    # set").  "cuckoo" always runs the partitioned bucket-store path
-    # (bloom_buckets buckets, ≥1) with 16-bit-fingerprint cuckoo blobs:
-    # same no-false-negative contract (stash + saturate degradation),
-    # better fpp per bit at high load, and DELETION — the re-crawl
-    # policy primitive (operators/seen.remove_partitioned_keys) a bloom
-    # cannot offer without a rebuild.
+    bloom_expected: int = 1_000_000  # sizes the cumulative filter (fixed m)
+    bloom_buckets: int = 1  # B, the seen filter's pmod(url_hash, B)
+    # buckets: one filter blob per bucket, built and applied on the
+    # executors with NO driver-assembled bitset.  1 is a single blob
+    # (cheapest at small scale); raise it so each blob stays small — a
+    # single bloom at 10^10 keys is ~17 GB (SURVEY §7.3).
+    seen_filter: str = "bloom"  # "bloom" | "cuckoo" — the filter in each
+    # bucket blob (north star: "bloom/cuckoo-filter URL-seen set").
+    # "cuckoo" uses 16-bit-fingerprint cuckoo blobs: same no-false-
+    # negative contract (stash + saturate degradation), better fpp per
+    # bit at high load, and DELETION — the re-crawl policy primitive
+    # (operators/seen.remove_partitioned_keys) a bloom cannot offer
+    # without a rebuild.
     respect_robots: bool = True
     broadcast_admitted_max: int = 2_000_000  # rows; 0 → let AQE pick the join
     write_partitions: int = 8  # per-round delta files; ~2-3× executors on a cluster
@@ -270,21 +275,13 @@ class FrontierCrawler:
             .groupBy(F.col("domain").alias("host"))
             .agg(F.min("scraper_type").alias("scrape_strategy"))
         )
-        self._bloom = None  # cumulative seen bloom, maintained incrementally
-        if config.seen_filter == "cuckoo" or config.bloom_buckets > 1:
-            from .operators.seen import BloomBucketStore, CuckooBucketStore
-
-            # the cuckoo option always runs the partitioned path (its
-            # blob protocol IS the bucket store; n_buckets=1 is fine)
-            cls = CuckooBucketStore if config.seen_filter == "cuckoo" else BloomBucketStore
-            self._bloom_store = cls(
-                os.path.join(store.root, "_blobs", "bloom_buckets"),
-                config.bloom_buckets,
-                max(16, config.bloom_expected // config.bloom_buckets),
-                config.bloom_fpp,
-            )
-        else:
-            self._bloom_store = None
+        cls = CuckooBucketStore if config.seen_filter == "cuckoo" else BloomBucketStore
+        self._bloom_store = cls(
+            os.path.join(store.root, "_blobs", "bloom_buckets"),
+            config.bloom_buckets,
+            max(16, config.bloom_expected // config.bloom_buckets),
+            config.bloom_fpp,
+        )
 
     # ------------------------------------------------------------------
     def _ensure_partitioned_bloom(self, round_id: int) -> None:
@@ -306,53 +303,12 @@ class FrontierCrawler:
             os.remove(p)
         advance_partitioned_bloom(seen, "url_hash", self._bloom_store, round_id - 1)
 
-    # ------------------------------------------------------------------
-    def _seen_bloom(self, round_id: int):
-        """Cumulative bloom over all seen hashes through round_id - 1.
-
-        Maintained incrementally: bloom_r = bloom_{r-1} ∪ bloom(delta_r)
-        (bitset OR is associative), so each round scans only its own
-        delta, never the full seen set.  The bitset is checkpointed as a
-        round blob for exact resume; at 10^10 scale the same protocol
-        applies per hash-bucket (partitioned blooms, SURVEY §7.3).
-        """
-        from .operators.seen import NumpyBloom
-
-        if self._bloom is not None:
-            return self._bloom
-        blob = self.store.load_blob("bloom", round_id - 1)
-        proto = NumpyBloom(self.config.bloom_expected, self.config.bloom_fpp)
-        if blob is not None and len(blob) == proto.m // 8:
-            import numpy as np
-
-            self._bloom = NumpyBloom.from_state(
-                np.frombuffer(blob, dtype=np.uint64).copy(), proto.m, proto.k
-            )
-            return self._bloom
-        # cold start (legacy store or first resume): rebuild from deltas
-        seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
-        if seen is None:
-            self._bloom = proto
-        else:
-            self._bloom = build_bloom(
-                seen, "url_hash", self.config.bloom_expected, self.config.bloom_fpp
-            )
-        return self._bloom
-
     def _advance_bloom(self, round_id: int) -> None:
-        delta = self.store.read_round(self.spark, "seen", round_id)
-        if self._bloom_store is not None:
-            from .operators.seen import advance_partitioned_bloom
+        """OR the committed seen round into every bucket's filter blob."""
+        from .operators.seen import advance_partitioned_bloom
 
-            advance_partitioned_bloom(delta, "url_hash", self._bloom_store, round_id)
-            return
-        if self._bloom is None:
-            self._seen_bloom(round_id)
-        delta_bloom = build_bloom(
-            delta, "url_hash", self.config.bloom_expected, self.config.bloom_fpp
-        )
-        self._bloom.union(delta_bloom)
-        self.store.save_blob("bloom", round_id, self._bloom.words.tobytes())
+        delta = self.store.read_round(self.spark, "seen", round_id)
+        advance_partitioned_bloom(delta, "url_hash", self._bloom_store, round_id)
 
     # ------------------------------------------------------------------
     def _build_robots_dim(self) -> DataFrame:
@@ -581,7 +537,7 @@ class FrontierCrawler:
         """One frontier-expansion round as a handful of write jobs.
 
         All metrics are collected with ``Observation``s DURING the write
-        actions — a round costs exactly: bloom build (1 small job) +
+        actions — a round costs exactly: seen-filter advance (1 small job) +
         4 table writes.  No count()-only jobs; the reference's CrawlLog
         bookkeeping (scheduler.py:392-399) rides along for free.
         """
@@ -590,20 +546,15 @@ class FrontierCrawler:
         cfg = self.config
         t0 = time.time()
 
-        # 1. URL-seen anti-join (incremental bloom prefilter + exact fallback)
+        # 1. URL-seen anti-join (incremental filter prefilter + exact fallback)
         seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
         if seen is None:
             candidates = frontier
-        elif cfg.use_bloom and self._bloom_store is not None:
-            from .operators.seen import anti_join_seen_partitioned
-
-            self._ensure_partitioned_bloom(round_id)
-            candidates = anti_join_seen_partitioned(
-                frontier, seen, self._bloom_store, round_id - 1, "canon_url", "url_hash"
-            )
         else:
-            bloom = self._seen_bloom(round_id) if cfg.use_bloom else None
-            candidates = anti_join_seen(frontier, seen, "canon_url", "url_hash", bloom)
+            self._ensure_partitioned_bloom(round_id)
+            candidates = anti_join_seen(
+                frontier, seen, "canon_url", "url_hash", self._bloom_store, round_id - 1
+            )
 
         # 2. robots gate (broadcast dim join + vectorized rule eval)
         with_rules = candidates.join(F.broadcast(self.robots_dim), on="host", how="left")
@@ -904,22 +855,16 @@ class FrontierCrawler:
         # articles carry the text payload → written at natural (extract)
         # partitioning so no text bytes shuffle; the small metadata deltas
         # get round-robin repartitioned to keep file counts sane.
-        # Optional per-step walls (SPARK_GRAFT_STEP_TIMING=1): each write
-        # job timed separately; "cache_fill" includes the fetch-join +
-        # extraction chain it materializes.  Recorded into the manifest.
+        # Per-step walls: each write job timed separately; "cache_fill"
+        # includes the fetch-join + extraction chain it materializes.
+        # Recorded into the manifest as step_secs.
         steps: dict[str, float] = {}
 
+        @contextlib.contextmanager
         def _timed(name):
-            import contextlib
-
-            @contextlib.contextmanager
-            def cm():
-                s = time.time()
-                yield
-                if os.environ.get("SPARK_GRAFT_STEP_TIMING") == "1":
-                    steps[name] = round(time.time() - s, 3)
-
-            return cm()
+            s = time.time()
+            yield
+            steps[name] = round(time.time() - s, 3)
 
         wp = cfg.write_partitions
         # The articles write is FUSED with the extraction pass: it is the
@@ -987,9 +932,8 @@ class FrontierCrawler:
         def _write_seen_then_bloom():
             with _timed("seen"):
                 self.store.write_round("seen", round_id, seen_obs_df, partitions=wp)
-            if cfg.use_bloom:
-                with _timed("bloom"):
-                    self._advance_bloom(round_id)
+            with _timed("bloom"):
+                self._advance_bloom(round_id)
 
         def _write_logs():
             with _timed("crawl_logs"):
@@ -1022,8 +966,7 @@ class FrontierCrawler:
 
         stats = {k: int(v or 0) for k, v in {**obs_seen.get, **obs_frontier.get}.items()}
         stats["wall_secs"] = round(time.time() - t0, 3)
-        if steps:
-            stats["step_secs"] = steps
+        stats["step_secs"] = steps
         self.store.commit_round(round_id, stats)
         # unpersist order matters: children (missing, slim) before
         # parents (extracted, admitted, evaluated), so no dependent

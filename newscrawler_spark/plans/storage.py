@@ -79,22 +79,6 @@ class RoundStore:
         pq.write_table(tbl, tmp)
         os.rename(tmp, os.path.join(path, "part-00000.parquet"))
 
-    def save_blob(self, name: str, round_id: int, data: bytes) -> None:
-        """Atomic small-artifact store (bloom bitsets etc.)."""
-        d = os.path.join(self.root, "_blobs")
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".{name}-{round_id}.bin.tmp")
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.rename(tmp, os.path.join(d, f"{name}-{round_id}.bin"))
-
-    def load_blob(self, name: str, round_id: int) -> bytes | None:
-        p = os.path.join(self.root, "_blobs", f"{name}-{round_id}.bin")
-        if not os.path.exists(p):
-            return None
-        with open(p, "rb") as f:
-            return f.read()
-
     def commit_round(self, round_id: int, stats: dict) -> None:
         man_dir = os.path.join(self.root, "_manifests")
         tmp = os.path.join(man_dir, f".round-{round_id}.json.tmp")

@@ -4,6 +4,9 @@ correctness contract)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 
 from newscrawler_spark.crawler import CrawlConfig, FrontierCrawler
@@ -103,20 +106,36 @@ def test_robots_denied_never_fetched(spark, spark_result):
 
 
 def test_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, oracle_result):
-    """Kill after round 1, resume → identical final state (T5/S10)."""
-    store = RoundStore(str(tmp_path_factory.mktemp("store_resume")))
-    cfg2 = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2})
-    FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, cfg2).run(resume=False)
-    assert store.last_committed_round() == 1
-    # resume with full rounds
-    FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, CFG).run(resume=True)
+    """Kill after round 1, resume → identical final state (T5/S10).
+    Second case: the seen-filter blobs are gone before the resume (lost
+    storage, or a store written before the bucket store), so the filter
+    is rebuilt from the committed seen rounds."""
     from newscrawler_spark.crawler import read_crawl_order
 
-    got_order = {
-        r["url"]: r["fetch_seq"] for r in read_crawl_order(spark, store).collect()
-    }
-    assert got_order == dict(oracle_result["order"])
-    got_seen = {
-        r["canon_url"]: r["status"] for r in store.read_rounds(spark, "seen").collect()
-    }
-    assert got_seen == oracle_result["seen"]
+    for drop_filter_blobs in (False, True):
+        store = RoundStore(str(tmp_path_factory.mktemp("store_resume")))
+        cfg2 = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2})
+        FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, cfg2).run(resume=False)
+        assert store.last_committed_round() == 1
+        if drop_filter_blobs:
+            blobs = os.path.join(store.root, "_blobs")
+            assert os.listdir(os.path.join(blobs, "bloom_buckets"))
+            shutil.rmtree(blobs)
+        # resume with full rounds
+        FrontierCrawler(spark, corpus["pages"], corpus["seeds"], store, CFG).run(resume=True)
+        got_order = {
+            r["url"]: r["fetch_seq"] for r in read_crawl_order(spark, store).collect()
+        }
+        assert got_order == dict(oracle_result["order"]), drop_filter_blobs
+        got_seen = {
+            r["canon_url"]: r["status"] for r in store.read_rounds(spark, "seen").collect()
+        }
+        assert got_seen == oracle_result["seen"], drop_filter_blobs
+
+
+def test_round_manifests_record_step_walls(spark_result):
+    """Every round manifest carries the per-step walls, unconditionally."""
+    store, _ = spark_result
+    steps = {"articles", "cache_fill", "seen", "bloom", "crawl_logs", "frontier"}
+    for r in range(store.last_committed_round() + 1):
+        assert set(store.manifest(r)["step_secs"]) == steps, r

@@ -15,7 +15,6 @@ from newscrawler_spark.operators.seen import (
     NumpyCuckoo,
     advance_partitioned_bloom,
     anti_join_seen,
-    anti_join_seen_partitioned,
     remove_partitioned_keys,
 )
 
@@ -109,9 +108,9 @@ def test_partitioned_cuckoo_equivalence(spark, frontier_and_seen, tmp_path):
     n = advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
     assert n == seen.count()
     assert store.complete(0)
-    out = anti_join_seen_partitioned(frontier, seen, store, 0)
+    out = anti_join_seen(frontier, seen, store=store, round_id=0)
     a = {r["url_hash"] for r in out.collect()}
-    b = {r["url_hash"] for r in anti_join_seen(frontier, seen, bloom=None).collect()}
+    b = {r["url_hash"] for r in anti_join_seen(frontier, seen).collect()}
     assert a == b
 
 
@@ -130,11 +129,11 @@ def test_partitioned_cuckoo_remove_readmits(spark, frontier_and_seen, tmp_path):
     removed = remove_partitioned_keys(due, "url_hash", store, round_id=0)
     assert removed == n_due
     still_seen = seen.join(due, ["url_hash", "canon_url"], "left_anti")
-    out = anti_join_seen_partitioned(frontier, still_seen, store, 0)
+    out = anti_join_seen(frontier, still_seen, store=store, round_id=0)
     a = {r["url_hash"] for r in out.collect()}
     b = {
         r["url_hash"]
-        for r in anti_join_seen(frontier, still_seen, bloom=None).collect()
+        for r in anti_join_seen(frontier, still_seen).collect()
     }
     assert a == b
     # the due URLs are back in the output (re-admitted)

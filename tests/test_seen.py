@@ -1,13 +1,19 @@
-"""Seen-set operator: bloom prefilter must be a pure optimization —
-bloom-on results ≡ bloom-off results (SURVEY §4: bloom only shrinks the
-anti-join input; the anti-join is the truth)."""
+"""Seen-set operator: the bucket-store bloom prefilter must be a pure
+optimization — filter-on results ≡ filter-off results at every bucket
+count (SURVEY §4: the bloom only shrinks the anti-join input; the
+anti-join is the truth)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from newscrawler_spark.operators.seen import NumpyBloom, anti_join_seen, build_bloom
+from newscrawler_spark.operators.seen import (
+    BloomBucketStore,
+    NumpyBloom,
+    advance_partitioned_bloom,
+    anti_join_seen,
+)
 
 
 def test_bloom_no_false_negatives():
@@ -48,36 +54,33 @@ def frontier_and_seen(spark):
     return base, seen
 
 
-def test_anti_join_bloom_equivalence(spark, frontier_and_seen):
+def test_anti_join_bloom_equivalence(spark, frontier_and_seen, tmp_path):
+    """Filter-on ≡ filter-off through the bucket store, at the crawler's
+    default single bucket and at B=3."""
     frontier, seen = frontier_and_seen
-    bloom = build_bloom(seen, "url_hash", expected=1000, fpp=1e-3)
-    with_bloom = anti_join_seen(frontier, seen, bloom=bloom)
-    without = anti_join_seen(frontier, seen, bloom=None)
-    a = {r["url_hash"] for r in with_bloom.collect()}
-    b = {r["url_hash"] for r in without.collect()}
-    assert a == b
-    assert len(a) == frontier.count() - seen.count()
+    without = {r["url_hash"] for r in anti_join_seen(frontier, seen).collect()}
+    assert len(without) == frontier.count() - seen.count()
+    for n_buckets in (1, 3):
+        store = BloomBucketStore(str(tmp_path / f"bb{n_buckets}"), n_buckets=n_buckets,
+                                 expected_per_bucket=1000, fpp=1e-3)
+        advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
+        with_bloom = anti_join_seen(frontier, seen, store=store, round_id=0)
+        assert {r["url_hash"] for r in with_bloom.collect()} == without, n_buckets
 
 
 def test_partitioned_bloom_equivalence(spark, frontier_and_seen, tmp_path):
     """Bucket-aligned partitioned blooms (B=4) ≡ exact anti-join —
     the same pure-optimization contract as the single bloom, with the
     bitsets built/loaded entirely by executor tasks (no driver bitset)."""
-    from newscrawler_spark.operators.seen import (
-        BloomBucketStore,
-        advance_partitioned_bloom,
-        anti_join_seen_partitioned,
-    )
-
     frontier, seen = frontier_and_seen
     store = BloomBucketStore(str(tmp_path / "bb"), n_buckets=4,
                              expected_per_bucket=512, fpp=1e-3)
     n = advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
     assert n == seen.count()
     assert store.complete(0)
-    out = anti_join_seen_partitioned(frontier, seen, store, 0)
+    out = anti_join_seen(frontier, seen, store=store, round_id=0)
     a = {r["url_hash"] for r in out.collect()}
-    b = {r["url_hash"] for r in anti_join_seen(frontier, seen, bloom=None).collect()}
+    b = {r["url_hash"] for r in anti_join_seen(frontier, seen).collect()}
     assert a == b
 
 
@@ -85,12 +88,6 @@ def test_partitioned_bloom_incremental_rounds(spark, tmp_path):
     """Round r's blobs = round r-1's ∪ delta_r, per bucket; empty-delta
     buckets still carry forward (skeleton rows)."""
     from pyspark.sql import functions as F
-
-    from newscrawler_spark.operators.seen import (
-        BloomBucketStore,
-        advance_partitioned_bloom,
-        anti_join_seen_partitioned,
-    )
 
     store = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
                              expected_per_bucket=256, fpp=1e-3)
@@ -105,7 +102,7 @@ def test_partitioned_bloom_incremental_rounds(spark, tmp_path):
     seen_all = mk(0, 60).unionByName(d1)
     frontier = mk(0, 200).withColumn("priority", F.lit(1))
     out = {r["url_hash"] for r in
-           anti_join_seen_partitioned(frontier, seen_all, store, 1).collect()}
+           anti_join_seen(frontier, seen_all, store=store, round_id=1).collect()}
     expect = {r["url_hash"] for r in
               frontier.join(seen_all, ["url_hash", "canon_url"], "left_anti").collect()}
     assert out == expect
@@ -113,7 +110,7 @@ def test_partitioned_bloom_incremental_rounds(spark, tmp_path):
 
 def test_crawler_partitioned_bloom_identical_crawl(spark, tmp_path):
     """A full crawl with bloom_buckets=4 produces the identical seen set
-    and fetch order as the single-bloom crawl (bloom is pure
+    and fetch order as the single-bucket crawl (bloom is pure
     optimization at every B)."""
     from newscrawler_spark.crawler import CrawlConfig, FrontierCrawler
     from newscrawler_spark.plans.storage import RoundStore
@@ -134,9 +131,10 @@ def test_crawler_partitioned_bloom_identical_crawl(spark, tmp_path):
     assert crawl("a", bloom_buckets=4) == crawl("b", bloom_buckets=1)
 
 
-def test_hash_collision_does_not_drop_urls(spark):
+def test_hash_collision_does_not_drop_urls(spark, tmp_path):
     """Two distinct URLs with the same url_hash: only the truly-seen one
-    is filtered (the join keys on (hash, url), not hash alone)."""
+    is filtered (the join keys on (hash, url), not hash alone) — the
+    bloom passes both, at B=1 and B=3."""
     frontier = spark.createDataFrame(
         [("https://a.com/x", 7), ("https://b.com/y", 7)],
         "canon_url string, url_hash long",
@@ -144,9 +142,12 @@ def test_hash_collision_does_not_drop_urls(spark):
     seen = spark.createDataFrame(
         [("https://a.com/x", 7)], "canon_url string, url_hash long"
     )
-    bloom = build_bloom(seen, "url_hash", expected=16)
-    out = [r["canon_url"] for r in anti_join_seen(frontier, seen, bloom=bloom).collect()]
-    assert out == ["https://b.com/y"]
+    for n_buckets in (1, 3):
+        store = BloomBucketStore(str(tmp_path / f"bb{n_buckets}"), n_buckets=n_buckets,
+                                 expected_per_bucket=16, fpp=1e-3)
+        advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
+        out = anti_join_seen(frontier, seen, store=store, round_id=0).collect()
+        assert [r["canon_url"] for r in out] == ["https://b.com/y"], n_buckets
 
 
 def test_partitioned_bloom_config_change_invalidates_blobs(spark, tmp_path):
@@ -155,11 +156,6 @@ def test_partitioned_bloom_config_change_invalidates_blobs(spark, tmp_path):
     read with the wrong m yields false NEGATIVES, which the exact-anti-
     join-on-positives design cannot recover from."""
     from pyspark.sql import functions as F
-
-    from newscrawler_spark.operators.seen import (
-        BloomBucketStore,
-        advance_partitioned_bloom,
-    )
 
     mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.concat(F.lit("u"), "id").alias("canon_url"), F.col("id").alias("url_hash")

@@ -1,6 +1,6 @@
-"""RoundStore checkpoint protocol: atomic manifests, rollback of
-uncommitted rounds, blob artifacts (T5/S10 — the Iceberg-snapshot
-protocol on parquet)."""
+"""RoundStore checkpoint protocol: atomic manifests and rollback of
+uncommitted rounds (T5/S10 — the Iceberg-snapshot protocol on
+parquet)."""
 
 from __future__ import annotations
 
@@ -25,13 +25,6 @@ def test_manifest_roundtrip(tmp_path, spark):
     back = store.read_round(spark, "seen", 0)
     assert back.count() == 10
     assert store.read_rounds(spark, "seen").count() == 10
-
-
-def test_blob_store(tmp_path):
-    store = RoundStore(str(tmp_path))
-    assert store.load_blob("bloom", 3) is None
-    store.save_blob("bloom", 3, b"\x01\x02")
-    assert store.load_blob("bloom", 3) == b"\x01\x02"
 
 
 def test_crashed_round_rolled_back_and_rerun(spark, tmp_path_factory):

@@ -1,12 +1,13 @@
-"""One-off: partitioned-bloom cost parity on the 4-executor cluster leg.
+"""One-off: seen-filter bucket-count cost parity on the 4-executor
+cluster leg.
 
-The recorded scaling legs run the single broadcast bloom (bloom_buckets
-= 1 — correct at sandbox seen-set sizes).  The 10^10-seen design is the
-partitioned bucket-aligned bloom store (`operators/seen.py`
-BloomBucketStore, SURVEY §7.3): per-bucket bitsets advanced and applied
-by executor tasks against shared-storage blobs, no driver-assembled
-bitset.  This probe runs the SAME 1M-page bulk leg at B=1 vs B=16 so
-the scale path's overhead is measured, not argued.
+The crawler's seen filter is the bucket-aligned bloom store
+(`operators/seen.py` BloomBucketStore, SURVEY §7.3): per-bucket bitsets
+advanced and applied by executor tasks against shared-storage blobs, no
+driver-assembled bitset.  The recorded scaling legs run one bucket
+(bloom_buckets = 1, the default); the 10^10-seen shape shards it.  This
+probe runs the SAME 1M-page bulk leg at B=1 vs B=16 so the cost of
+sharding is measured, not argued.
 
 Usage: python tools/bloom_bucket_probe.py [--buckets 16] [--repeats 1]
 """
@@ -40,7 +41,6 @@ def main() -> None:
     )
     warmup = generate_corpus(os.path.join(sb.BENCH, "warmup"), n_pages=300, n_hosts=6)
 
-    os.environ["SPARK_GRAFT_STEP_TIMING"] = "1"
     zpath = sb.build_pyfiles_zip()
     procs = sb.start_cluster()
     runs: dict[int, list] = {1: [], args.buckets: []}

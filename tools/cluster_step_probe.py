@@ -50,7 +50,6 @@ def main() -> None:
     )
     warmup = generate_corpus(os.path.join(sb.BENCH, "warmup"), n_pages=300, n_hosts=6)
 
-    os.environ["SPARK_GRAFT_STEP_TIMING"] = "1"
     zpath = sb.build_pyfiles_zip()
     procs = sb.start_cluster()
     out = {}

@@ -32,9 +32,9 @@ def main() -> None:
         "--bloom-buckets",
         type=int,
         default=1,
-        help="partitioned bucket-aligned seen blooms (>1): the 10^10-seen "
-        "shape — per-bucket bitsets advanced/applied by executor tasks, "
-        "no driver-assembled bitset",
+        help="buckets of the seen filter: one filter blob per "
+        "pmod(url_hash, B) bucket, advanced/applied by executor tasks "
+        "with no driver-assembled bitset; raise it for large seen sets",
     )
     ap.add_argument(
         "--seen-filter",
