@@ -50,8 +50,9 @@ from .functions.robots import (
 from .operators.politeness import admit_per_host, global_fetch_order
 # build_bloom is unused here; perfbench's traced mode patches it in this namespace
 from .operators.seen import (  # noqa: F401
-    BloomBucketStore,
-    CuckooBucketStore,
+    BucketStore,
+    NumpyBloom,
+    NumpyCuckoo,
     anti_join_seen,
     build_bloom,
 )
@@ -80,6 +81,10 @@ _ROBOTS_ISIN_MAX = 10_000
 # driver-broadcast build for a fully-parallel shuffled hash join.
 _BULK_BUDGET = 100_000_000
 
+# files per round for the seen and frontier deltas; ~2-3× executors on
+# a cluster
+_WRITE_PARTITIONS = 8
+
 
 @dataclass(frozen=True)
 class CrawlConfig:
@@ -89,23 +94,21 @@ class CrawlConfig:
     min_content_len: int = 40       # ref min-content gate (newspaper_scraper.py:39)
     max_links_per_page: int = 100   # ref link cap (scraper_gui.py:483-486)
     n_salts: int = 8
-    bloom_fpp: float = 1e-3
     bloom_expected: int = 1_000_000  # sizes the cumulative filter (fixed m)
     bloom_buckets: int = 1  # B, the seen filter's pmod(url_hash, B)
-    # buckets: one filter blob per bucket, built and applied on the
-    # executors with NO driver-assembled bitset.  1 is a single blob
-    # (cheapest at small scale); raise it so each blob stays small — a
-    # single bloom at 10^10 keys is ~17 GB (SURVEY §7.3).
-    seen_filter: str = "bloom"  # "bloom" | "cuckoo" — the filter in each
-    # bucket blob (north star: "bloom/cuckoo-filter URL-seen set").
-    # "cuckoo" uses 16-bit-fingerprint cuckoo blobs: same no-false-
-    # negative contract (stash + saturate degradation), better fpp per
-    # bit at high load, and DELETION — the re-crawl policy primitive
-    # (operators/seen.remove_partitioned_keys) a bloom cannot offer
-    # without a rebuild.
+    # buckets: one filter blob per bucket in the seen BucketStore, built
+    # and applied on the executors with NO driver-assembled filter.  1 is
+    # a single blob (cheapest at small scale); raise it so each blob
+    # stays small — a single bloom at 10^10 keys is ~17 GB (SURVEY §7.3).
+    seen_filter: str = "bloom"  # "bloom" | "cuckoo" — the store's filter
+    # class (north star: "bloom/cuckoo-filter URL-seen set").  "bloom" is
+    # NumpyBloom at fpp 1e-3; "cuckoo" is NumpyCuckoo, 16-bit
+    # fingerprints: same no-false-negative contract (stash + saturate
+    # degradation), better fpp per bit at high load, and DELETION — the
+    # re-crawl policy primitive (operators/seen.remove_partitioned_keys)
+    # a bloom cannot offer without a rebuild.
     respect_robots: bool = True
     broadcast_admitted_max: int = 2_000_000  # rows; 0 → let AQE pick the join
-    write_partitions: int = 8  # per-round delta files; ~2-3× executors on a cluster
     cache_pages: bool = True  # persist the pages scan across rounds (MEMORY_AND_DISK).
     # At 100 TB you set False and rely on the bucketed pages layout +
     # broadcast-probe join instead; in local/bench mode caching removes
@@ -275,12 +278,11 @@ class FrontierCrawler:
             .groupBy(F.col("domain").alias("host"))
             .agg(F.min("scraper_type").alias("scrape_strategy"))
         )
-        cls = CuckooBucketStore if config.seen_filter == "cuckoo" else BloomBucketStore
-        self._bloom_store = cls(
+        self._bloom_store = BucketStore(
             os.path.join(store.root, "_blobs", "bloom_buckets"),
             config.bloom_buckets,
             max(16, config.bloom_expected // config.bloom_buckets),
-            config.bloom_fpp,
+            NumpyCuckoo if config.seen_filter == "cuckoo" else NumpyBloom,
         )
 
     # ------------------------------------------------------------------
@@ -295,12 +297,8 @@ class FrontierCrawler:
         seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
         if seen is None:
             return
-        # rebuild directly at round_id - 1: drop stale files so the
-        # advance pass starts from empty filters
-        import glob
-
-        for p in glob.glob(os.path.join(self._bloom_store.root, self._bloom_store.file_glob)):
-            os.remove(p)
+        # rebuild directly at round_id - 1 from empty filters
+        self._bloom_store.clear()
         advance_partitioned_bloom(seen, "url_hash", self._bloom_store, round_id - 1)
 
     def _advance_bloom(self, round_id: int) -> None:
@@ -540,11 +538,30 @@ class FrontierCrawler:
         actions — a round costs exactly: seen-filter advance (1 small job) +
         4 table writes.  No count()-only jobs; the reference's CrawlLog
         bookkeeping (scheduler.py:392-399) rides along for free.
+
+        Every cache the round makes is registered in ``round_caches`` as
+        it is created and released in reverse creation order on every
+        exit path, failed rounds included: children before parents, so no
+        dependent cache entry survives to be re-registered buffer-less.
         """
+        round_caches: list = []
+        try:
+            return self._run_round(round_id, frontier, seq_offset, round_caches)
+        finally:
+            for c in reversed(round_caches):
+                c.unpersist()
+
+    def _run_round(
+        self, round_id: int, frontier: DataFrame, seq_offset: int, round_caches: list
+    ) -> dict:
         from pyspark.sql import Observation
 
         cfg = self.config
         t0 = time.time()
+
+        def cached(df: DataFrame) -> DataFrame:
+            round_caches.append(df.persist())
+            return df
 
         # 1. URL-seen anti-join (incremental filter prefilter + exact fallback)
         seen = self.store.read_rounds(self.spark, "seen", upto=round_id - 1)
@@ -563,13 +580,13 @@ class FrontierCrawler:
                 list(with_rules.schema.fields)
                 + [T.StructField("allowed", T.BooleanType(), False)]
             )
-            evaluated = with_rules.mapInPandas(
-                robots_filter_map_in_pandas, schema=rules_schema
-            ).persist()
+            evaluated = cached(
+                with_rules.mapInPandas(robots_filter_map_in_pandas, schema=rules_schema)
+            )
             denied = evaluated.filter(~F.col("allowed"))
             allowed = evaluated.filter(F.col("allowed"))
         else:
-            evaluated = with_rules.persist()
+            evaluated = cached(with_rules)
             denied = evaluated.limit(0)
             allowed = evaluated
 
@@ -591,7 +608,6 @@ class FrontierCrawler:
             deferred = allowed.limit(0)
         else:
             admitted, deferred = admit_per_host(allowed, "host_budget", cfg.n_salts)
-        round_caches: list = []  # internal operator caches, dropped at round end
         if cfg.scalable_fetch_order:
             from .operators.politeness import global_fetch_order_scalable
 
@@ -606,7 +622,7 @@ class FrontierCrawler:
                 admitted, seq_offset, cache_registry=round_caches
             )
         else:
-            admitted = global_fetch_order(admitted, seq_offset).persist()
+            admitted = cached(global_fetch_order(admitted, seq_offset))
 
         # 4. the "fetch" join.  The admitted side is politeness-bounded
         # (≤ hosts × budget rows), so by default it broadcasts against
@@ -675,7 +691,7 @@ class FrontierCrawler:
                 out["partition_id"] = pid
                 yield out
 
-        extracted = fetched.mapInPandas(extract_part, schema=ext_schema).persist()
+        extracted = cached(fetched.mapInPandas(extract_part, schema=ext_schema))
 
         # The fat extraction cache carries the text payload (~8 KB/row);
         # only the articles write needs it.  The other consumers (seen,
@@ -687,22 +703,24 @@ class FrontierCrawler:
         # cache (119.8 s at 1 core → 74.5 s at 4; GC-bound); at 100 TB
         # keeping the text live for link discovery would be a
         # memory-bandwidth bottleneck on every executor.
-        slim = extracted.select(
-            "url_hash",
-            "canon_url",
-            "host",
-            "priority",
-            "discovered_round",
-            "fetch_seq",
-            "partition_id",
-            F.length("text").alias("text_len"),
-            "out_links",
-        ).persist()
+        slim = cached(
+            extracted.select(
+                "url_hash",
+                "canon_url",
+                "host",
+                "priority",
+                "discovered_round",
+                "fetch_seq",
+                "partition_id",
+                F.length("text").alias("text_len"),
+                "out_links",
+            )
+        )
 
         # persisted: consumed by both the seen and crawl_logs writes —
         # without the cache each write job rebuilds the ext_keys
         # hash side and re-runs the anti-join (measured ~5 s/round).
-        missing = self._missing_join(adm, slim.select("url_hash", "canon_url")).persist()
+        missing = cached(self._missing_join(adm, slim.select("url_hash", "canon_url")))
 
         present = extracted
         articles = present.filter(F.length("text") >= cfg.min_content_len)
@@ -866,7 +884,6 @@ class FrontierCrawler:
             yield
             steps[name] = round(time.time() - s, 3)
 
-        wp = cfg.write_partitions
         # The articles write is FUSED with the extraction pass: it is the
         # first job over the fat `extracted` cache, so extraction + the
         # text-payload parquet encode happen in ONE pass over the ~10 KB
@@ -931,7 +948,9 @@ class FrontierCrawler:
         # write surfaces via .result() before the round commits.
         def _write_seen_then_bloom():
             with _timed("seen"):
-                self.store.write_round("seen", round_id, seen_obs_df, partitions=wp)
+                self.store.write_round(
+                    "seen", round_id, seen_obs_df, partitions=_WRITE_PARTITIONS
+                )
             with _timed("bloom"):
                 self._advance_bloom(round_id)
 
@@ -944,7 +963,9 @@ class FrontierCrawler:
 
         def _write_frontier():
             with _timed("frontier"):
-                self.store.write_round("frontier", round_id, frontier_obs_df, partitions=wp)
+                self.store.write_round(
+                    "frontier", round_id, frontier_obs_df, partitions=_WRITE_PARTITIONS
+                )
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -968,16 +989,6 @@ class FrontierCrawler:
         stats["wall_secs"] = round(time.time() - t0, 3)
         stats["step_secs"] = steps
         self.store.commit_round(round_id, stats)
-        # unpersist order matters: children (missing, slim) before
-        # parents (extracted, admitted, evaluated), so no dependent
-        # cache entry survives to be re-registered buffer-less
-        missing.unpersist()
-        slim.unpersist()
-        extracted.unpersist()
-        admitted.unpersist()
-        for c in round_caches:  # operator-internal caches (e.g. the
-            c.unpersist()      # scalable fetch-order's ranged set)
-        evaluated.unpersist()
         return stats
 
 

@@ -164,9 +164,10 @@ c_0 AS (
         FROM qv) s
   WHERE rn = 1)"""
     parts = [head]
+    # list_sum over BIGINT is HUGEINT in DuckDB; the gate surface is BIGINT
     d2 = (
-        "list_sum(list_transform(range(1, len(q.v) + 1),"
-        " i -> (q.v[i] - c.c[i]) * (q.v[i] - c.c[i])))"
+        "CAST(list_sum(list_transform(range(1, len(q.v) + 1),"
+        " i -> (q.v[i] - c.c[i]) * (q.v[i] - c.c[i]))) AS BIGINT)"
     )
     for t in range(1, iterations + 1):
         parts.append(f""",

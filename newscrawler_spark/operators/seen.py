@@ -7,10 +7,11 @@ before INSERT (``src/cli.py:72-77``) backed by a UNIQUE index
   1. an **approximate filter** (bloom or cuckoo) over the seen
      ``url_hash`` values, split into ``B`` buckets by
      ``pmod(url_hash, B)``.  Each bucket's filter is a shared-storage
-     blob that executor tasks advance and apply themselves
-     (:class:`BloomBucketStore`, :class:`CuckooBucketStore`) — the
-     driver never assembles or broadcasts a bitset.  Filter *negatives*
-     are definitely new and skip the join entirely;
+     blob in one :class:`BucketStore` (``filter_cls`` :class:`NumpyBloom`
+     or :class:`NumpyCuckoo`) that executor tasks advance, remove from
+     and apply themselves in one bucket pass — the driver never
+     assembles or broadcasts a filter.  Filter *negatives* are
+     definitely new and skip the join entirely;
   2. an **exact left-anti join** on ``(url_hash, url)`` for the filter
      *positives* only.  The join keys include the full URL string, so a
      60-bit hash collision can never drop a URL — the hash exists to
@@ -30,6 +31,7 @@ tested filter-on vs filter-off at B=1 and B>1.
 from __future__ import annotations
 
 import math
+import os
 from typing import Iterator
 
 import numpy as np
@@ -49,14 +51,14 @@ class NumpyBloom:
     pandas-UDF prefilter costs O(batch) numpy ops, not per-row Python.
     """
 
-    def __init__(self, expected: int, fpp: float = 1e-3, words: np.ndarray | None = None):
+    BLOB_PREFIX = "bloomb"
+
+    def __init__(self, expected: int, fpp: float = 1e-3):
         expected = max(expected, 16)
         m = int(-expected * math.log(fpp) / (math.log(2) ** 2))
         self.m = ((m + 63) // 64) * 64
         self.k = max(1, round(self.m / expected * math.log(2)))
-        self.words = (
-            words if words is not None else np.zeros(self.m // 64, dtype=np.uint64)
-        )
+        self.words = np.zeros(self.m // 64, dtype=np.uint64)
 
     def _probes(self, hashes: np.ndarray) -> Iterator[np.ndarray]:
         h1 = hashes.astype(np.int64).view(np.uint64)
@@ -78,15 +80,23 @@ class NumpyBloom:
             out &= ((word >> (idx & np.uint64(63))) & np.uint64(1)).astype(bool)
         return out
 
-    def union(self, other: "NumpyBloom") -> None:
-        assert self.m == other.m and self.k == other.k
-        self.words |= other.words
+    # -- serialization (blob protocol, see BucketStore) ------------------
+    def blob_name(self, bucket: int, round_id: int) -> str:
+        return f"{self.BLOB_PREFIX}{bucket}-{round_id}.m{self.m}k{self.k}.bin"
 
-    @classmethod
-    def from_state(cls, words: np.ndarray, m: int, k: int) -> "NumpyBloom":
-        obj = object.__new__(cls)
-        obj.words, obj.m, obj.k = words, m, k
-        return obj
+    def to_bytes(self) -> bytes:
+        return self.words.tobytes()
+
+    def from_bytes(self, blob: bytes) -> "NumpyBloom":
+        """Load ``blob`` into this (empty) filter; its geometry must match."""
+        words = np.frombuffer(blob, dtype=np.uint64)
+        if words.size != self.m // 64:
+            raise ValueError(
+                f"bloom blob has {words.size} words, expected {self.m // 64}"
+                " — written under a different filter config"
+            )
+        self.words = words.copy()
+        return self
 
 
 def build_bloom(seen: DataFrame, hash_col: str, expected: int, fpp: float = 1e-3) -> NumpyBloom:
@@ -95,7 +105,7 @@ def build_bloom(seen: DataFrame, hash_col: str, expected: int, fpp: float = 1e-3
     Each partition emits one serialized partial bitset (mapInPandas);
     the driver ORs them — the full hash set never moves to the driver,
     only ~m/8 bytes per partition.  Not on the crawler's seen path,
-    which builds its blooms on the executors (:class:`BloomBucketStore`).
+    which builds its blooms on the executors (:class:`BucketStore`).
     """
     proto = NumpyBloom(expected, fpp)
     m, k = proto.m, proto.k
@@ -110,221 +120,12 @@ def build_bloom(seen: DataFrame, hash_col: str, expected: int, fpp: float = 1e-3
                 bloom.add(h)
                 nonempty = True
         if nonempty:
-            yield pd.DataFrame({"bits": [bloom.words.tobytes()]})
+            yield pd.DataFrame({"bits": [bloom.to_bytes()]})
 
     parts = seen.select(hash_col).mapInPandas(partial, schema="bits binary").collect()
     for row in parts:
         proto.words |= np.frombuffer(row["bits"], dtype=np.uint64)
     return proto
-
-
-class BloomBucketStore:
-    """Partitioned, bucket-aligned blooms (SURVEY §7.3): one bitset per
-    ``pmod(url_hash, B)`` bucket, stored as shared-storage blobs that
-    EXECUTORS write and read directly — the driver never assembles (or
-    even sees) a full bitset.
-
-    Why: a single bloom for 10^10 hashes at fpp 1e-3 is ~17 GB — too
-    big to build on, hold in, or broadcast from the driver.  Bucketed,
-    each blob is ~17 GB / B; build tasks OR only their buckets' deltas
-    into their buckets' blobs, and apply tasks load only the buckets
-    their rows touch (with the seen/frontier tables bucket-partitioned
-    by the same key in storage — the Iceberg layout — that is exactly
-    one blob per task, fetched once).  Locally the "shared storage" is
-    the crawl store's ``_blobs`` dir (atomic tmp + rename, the same
-    protocol as the RoundStore manifests); on a cluster it is
-    object-store puts from executors.  ``B=1`` is a single blob — the
-    crawler's default.
-
-    Files are per-round cumulative (``bloomb{b}-{r}.m{m}k{k}.bin``): round r's
-    blob for bucket b = round r-1's ∪ bloom(delta_r ∩ bucket b), so
-    resume reads exactly the committed round's files and a crash
-    mid-build is invisible (next run overwrites round r's files
-    idempotently; commit is the round manifest, as for tables).
-    """
-
-    file_prefix = "bloomb"
-
-    def __init__(self, root: str, n_buckets: int, expected_per_bucket: int, fpp: float):
-        proto = NumpyBloom(expected_per_bucket, fpp)
-        self.root = root
-        self.n_buckets = n_buckets
-        self.m, self.k = proto.m, proto.k
-        self.expected_per_bucket = expected_per_bucket
-        self.fpp = fpp
-
-    @property
-    def file_glob(self) -> str:
-        return f"{self.file_prefix}*.bin"
-
-    def path(self, bucket: int, round_id: int) -> str:
-        import os
-
-        # m/k are part of the filename: blobs written under a different
-        # bloom config (e.g. a resume with a new --bloom-expected) are
-        # simply "not found", so complete() turns false and the caller
-        # rebuilds from the committed seen rounds — reinterpreting a
-        # bitset with the wrong m would produce false NEGATIVES, which
-        # the exact-anti-join-on-positives design cannot recover from.
-        return os.path.join(
-            self.root, f"{self.file_prefix}{bucket}-{round_id}.m{self.m}k{self.k}.bin"
-        )
-
-    def complete(self, round_id: int) -> bool:
-        """True iff every bucket has a blob for ``round_id``."""
-        import os
-
-        return all(
-            os.path.exists(self.path(b, round_id)) for b in range(self.n_buckets)
-        )
-
-    # -- executor-side primitives (no Spark imports at call time) ------
-    def load_bucket(self, bucket: int, round_id: int) -> NumpyBloom:
-        import os
-
-        p = self.path(bucket, round_id)
-        if round_id < 0 or not os.path.exists(p):
-            return NumpyBloom(self.expected_per_bucket, self.fpp)
-        words = np.fromfile(p, dtype=np.uint64)
-        if words.size != self.m // 64:
-            raise ValueError(
-                f"bloom blob {p} has {words.size} words, expected "
-                f"{self.m // 64} — written under a different bloom config"
-            )
-        return NumpyBloom.from_state(words, self.m, self.k)
-
-    def write_bucket(self, bucket: int, round_id: int, bloom: NumpyBloom) -> None:
-        import os
-
-        os.makedirs(self.root, exist_ok=True)
-        p = self.path(bucket, round_id)
-        tmp = p + f".tmp{os.getpid()}"
-        bloom.words.tofile(tmp)
-        os.rename(tmp, p)
-
-
-def _bucket_of(hashes: np.ndarray, n_buckets: int) -> np.ndarray:
-    """pmod(hash, B) with Spark's non-negative-modulo semantics."""
-    return ((hashes.astype(np.int64) % n_buckets) + n_buckets) % n_buckets
-
-
-def advance_partitioned_bloom(
-    seen_delta: DataFrame,
-    hash_col: str,
-    store: BloomBucketStore,
-    round_id: int,
-) -> int:
-    """Advance every bucket's cumulative bloom to ``round_id`` by OR-ing
-    in the round's seen delta — entirely on the executors.
-
-    The delta is repartitioned by bucket (B-way shuffle of the skinny
-    hash column only — on an Iceberg seen table bucket-partitioned by
-    the same key this shuffle disappears; here it moves 8 bytes/row), a
-    skeleton row per bucket guarantees even empty buckets carry their
-    cumulative file forward, and each task loads round r-1's blobs for
-    ITS buckets, ORs, and writes round r's blobs directly.  The driver
-    receives only (bucket, n_added) counters.
-    """
-    spark = seen_delta.sparkSession
-    B = store.n_buckets
-    # skeleton rows use a flag, NOT a null hash — a nullable int64
-    # column arrives in pandas as float64, silently rounding 60-bit
-    # hashes (>2^53) and corrupting the bitset (false negatives, which
-    # unlike false positives break the equivalence contract)
-    skeleton = spark.range(B).select(
-        F.col("id").cast("int").alias("__bucket"),
-        F.lit(0).cast("long").alias("__h"),
-        F.lit(False).alias("__real"),
-    )
-    rows = seen_delta.select(
-        F.pmod(F.col(hash_col), F.lit(B)).cast("int").alias("__bucket"),
-        F.col(hash_col).alias("__h"),
-        F.lit(True).alias("__real"),
-    ).unionByName(skeleton)
-
-    # the store is plain data (paths + geometry) — the closure ships it
-    # to the executors whole; load_bucket/add/write_bucket is the shared
-    # filter-store contract (BloomBucketStore, CuckooBucketStore)
-    st = store
-
-    def advance(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        filters: dict[int, object] = {}
-        counts: dict[int, int] = {}
-        for pdf in it:
-            for b, grp in pdf.groupby("__bucket"):
-                b = int(b)
-                if b not in filters:
-                    filters[b] = st.load_bucket(b, round_id - 1)
-                    counts[b] = 0
-                h = grp.loc[grp["__real"], "__h"].to_numpy(dtype=np.int64)
-                if len(h):
-                    filters[b].add(h)
-                    counts[b] += len(h)
-        for b, filt in filters.items():
-            st.write_bucket(b, round_id, filt)
-        if filters:
-            yield pd.DataFrame(
-                {"bucket": list(filters), "n_added": [counts[b] for b in filters]}
-            )
-
-    stats = (
-        rows.repartition(B, "__bucket")
-        .mapInPandas(advance, schema="bucket int, n_added long")
-        .collect()
-    )
-    return int(sum(r["n_added"] for r in stats))
-
-
-def anti_join_seen(
-    frontier: DataFrame,
-    seen: DataFrame,
-    url_col: str = "canon_url",
-    hash_col: str = "url_hash",
-    store: BloomBucketStore | CuckooBucketStore | None = None,
-    round_id: int = -1,
-) -> DataFrame:
-    """Rows of ``frontier`` whose (hash, url) is absent from ``seen``.
-
-    Without a ``store``: the plain left-anti join (the correctness
-    baseline).  With one: each row is first tested against its bucket's
-    round-``round_id`` filter, map-side wherever the frontier rows
-    already are (no extra shuffle; each task lazily loads only the
-    bucket blobs its batches touch).  Negatives bypass the join (the
-    filters have no false negatives); positives take the EXACT (hash,
-    url) anti-join, so the result is identical either way.
-    """
-    seen_keys = seen.select(hash_col, url_col).dropDuplicates([hash_col, url_col])
-    if store is None:
-        return frontier.join(seen_keys, on=[hash_col, url_col], how="left_anti")
-
-    from pyspark.sql import types as T
-
-    st, n_buckets = store, store.n_buckets
-
-    def prefilter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, object] = {}
-        for pdf in it:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            out = np.zeros(len(h), dtype=bool)
-            buckets = _bucket_of(h, n_buckets)
-            for b in np.unique(buckets):
-                b = int(b)
-                if b not in cache:
-                    cache[b] = st.load_bucket(b, round_id)
-                mask = buckets == b
-                out[mask] = cache[b].might_contain(h[mask])
-            pdf = pdf.copy()
-            pdf["__maybe_seen"] = out
-            yield pdf
-
-    out_schema = T.StructType(
-        list(frontier.schema.fields) + [T.StructField("__maybe_seen", T.BooleanType())]
-    )
-    tagged = frontier.mapInPandas(prefilter, schema=out_schema)
-    definitely_new = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    survivors = maybe.join(seen_keys, on=[hash_col, url_col], how="left_anti")
-    return definitely_new.unionByName(survivors)
 
 
 # ---------------------------------------------------------------------------
@@ -373,16 +174,21 @@ class NumpyCuckoo:
     * deletion caveat (inherent to cuckoo filters): only delete keys
       known to be present, and at most once per insert — deleting an
       absent key may evict a colliding key's fingerprint.
+
+    Runs in the same :class:`BucketStore` as the bloom
+    (``filter_cls=NumpyCuckoo``, the crawler's ``seen_filter="cuckoo"``);
+    its blob carries the stash and the saturation flag with the table.
     """
 
     SLOTS = 4
     STASH_MAX = 512
     MAX_KICKS = 500
 
-    def __init__(self, expected: int, m: int | None = None):
-        if m is None:
-            want = max(16, int(expected / (self.SLOTS * 0.95)))
-            m = 1 << (want - 1).bit_length()
+    BLOB_PREFIX = "cuckoob"
+
+    def __init__(self, expected: int):
+        want = max(16, int(expected / (self.SLOTS * 0.95)))
+        m = 1 << (want - 1).bit_length()
         self.m = m
         self.table = np.zeros((m, self.SLOTS), dtype=np.uint16)
         self.stash_b: list[int] = []
@@ -496,7 +302,10 @@ class NumpyCuckoo:
                     break
         return removed
 
-    # -- serialization (blob protocol) ----------------------------------
+    # -- serialization (blob protocol, see BucketStore) ------------------
+    def blob_name(self, bucket: int, round_id: int) -> str:
+        return f"{self.BLOB_PREFIX}{bucket}-{round_id}.m{self.m}.bin"
+
     def to_bytes(self) -> bytes:
         head = np.array([len(self.stash_b), int(self.saturated)], dtype=np.uint64)
         return (
@@ -506,8 +315,8 @@ class NumpyCuckoo:
             + self.table.tobytes()
         )
 
-    @classmethod
-    def from_bytes(cls, blob: bytes, m: int) -> "NumpyCuckoo":
+    def from_bytes(self, blob: bytes) -> "NumpyCuckoo":
+        """Load ``blob`` into this (empty) filter; its geometry must match."""
         head = np.frombuffer(blob[:16], dtype=np.uint64)
         ns, sat = int(head[0]), bool(head[1])
         off = 16
@@ -516,122 +325,257 @@ class NumpyCuckoo:
         stash_fp = np.frombuffer(blob[off : off + 2 * ns], dtype=np.uint16)
         off += 2 * ns
         table = np.frombuffer(blob[off:], dtype=np.uint16)
-        if table.size != m * cls.SLOTS:
+        if table.size != self.table.size:
             raise ValueError(
-                f"cuckoo blob has {table.size} slots, expected {m * cls.SLOTS}"
+                f"cuckoo blob has {table.size} slots, expected {self.table.size}"
                 " — written under a different filter config"
             )
-        obj = object.__new__(cls)
-        obj.m = m
-        obj.table = table.reshape(m, cls.SLOTS).copy()
-        obj.stash_b = [int(x) for x in stash_b]
-        obj.stash_fp = [int(x) for x in stash_fp]
-        obj.saturated = sat
-        return obj
+        self.table = table.reshape(self.table.shape).copy()
+        self.stash_b = [int(x) for x in stash_b]
+        self.stash_fp = [int(x) for x in stash_fp]
+        self.saturated = sat
+        return self
 
 
-class CuckooBucketStore:
-    """Partitioned, bucket-aligned cuckoo filters — same blob protocol,
-    sharding and executor-side build/apply as :class:`BloomBucketStore`
-    (one filter per ``pmod(url_hash, B)`` bucket, per-round cumulative
-    files, geometry in the filename), duck-type-compatible with
-    :func:`advance_partitioned_bloom` / :func:`anti_join_seen`.
-    The delta vs bloom: per-bucket **deletion** (``remove_bucket_keys``)
-    for re-crawl policy, without rebuilding the filter."""
+# ---------------------------------------------------------------------------
+# Bucket store: one filter blob per pmod(url_hash, B) bucket
+# ---------------------------------------------------------------------------
 
-    file_prefix = "cuckoob"
 
-    def __init__(self, root: str, n_buckets: int, expected_per_bucket: int, fpp: float = 0.0):
-        # fpp accepted for constructor parity; cuckoo fpp is fixed by the
-        # 16-bit fingerprint (≈0.012% at 95% load)
-        proto = NumpyCuckoo(max(16, expected_per_bucket))
+class BucketStore:
+    """Partitioned, bucket-aligned seen filters (SURVEY §7.3): one filter
+    per ``pmod(url_hash, B)`` bucket, stored as shared-storage blobs that
+    EXECUTORS write and read directly — the driver never assembles (or
+    even sees) a full filter.  ``filter_cls`` is :class:`NumpyBloom` (the
+    default) or :class:`NumpyCuckoo`; each filter owns its blob format
+    (``to_bytes`` / ``from_bytes`` / ``blob_name``), the store owns the
+    files.
+
+    Why: a single bloom for 10^10 hashes at fpp 1e-3 is ~17 GB — too
+    big to build on, hold in, or broadcast from the driver.  Bucketed,
+    each blob is ~17 GB / B; build tasks add only their buckets' deltas
+    into their buckets' blobs, and apply tasks load only the buckets
+    their rows touch (with the seen/frontier tables bucket-partitioned
+    by the same key in storage — the Iceberg layout — that is exactly
+    one blob per task, fetched once).  Locally the "shared storage" is
+    the crawl store's ``_blobs`` dir (atomic tmp + rename, the same
+    protocol as the RoundStore manifests); on a cluster it is
+    object-store puts from executors.  ``B=1`` is a single blob — the
+    crawler's default.
+
+    Files are per-round cumulative (``bloomb{b}-{r}.m{m}k{k}.bin``,
+    ``cuckoob{b}-{r}.m{m}.bin``): round r's blob for bucket b = round
+    r-1's plus delta_r ∩ bucket b, so resume reads exactly the committed
+    round's files and a crash mid-build is invisible (next run
+    overwrites round r's files idempotently; commit is the round
+    manifest, as for tables).  The filter geometry is part of the file
+    name: blobs written under a different config (e.g. a resume with a
+    new ``bloom_expected``) are simply "not found", so :meth:`complete`
+    turns false and the caller rebuilds from the committed seen rounds —
+    reinterpreting a filter with the wrong geometry would produce false
+    NEGATIVES, which the exact-anti-join-on-positives design cannot
+    recover from.
+    """
+
+    def __init__(self, root: str, n_buckets: int, expected_per_bucket: int,
+                 filter_cls: type = NumpyBloom):
         self.root = root
         self.n_buckets = n_buckets
-        self.m = proto.m
         self.expected_per_bucket = expected_per_bucket
-        self.fpp = fpp
+        self.filter_cls = filter_cls
 
-    @property
-    def file_glob(self) -> str:
-        return f"{self.file_prefix}*.bin"
+    def empty(self):
+        """A fresh filter of this store's geometry."""
+        return self.filter_cls(self.expected_per_bucket)
 
-    def path(self, bucket: int, round_id: int) -> str:
-        import os
-
-        return os.path.join(
-            self.root, f"{self.file_prefix}{bucket}-{round_id}.m{self.m}.bin"
-        )
+    def _path(self, filt, bucket: int, round_id: int) -> str:
+        return os.path.join(self.root, filt.blob_name(bucket, round_id))
 
     def complete(self, round_id: int) -> bool:
-        import os
-
+        """True iff every bucket has a blob for ``round_id``."""
+        filt = self.empty()
         return all(
-            os.path.exists(self.path(b, round_id)) for b in range(self.n_buckets)
+            os.path.exists(self._path(filt, b, round_id)) for b in range(self.n_buckets)
         )
 
-    def load_bucket(self, bucket: int, round_id: int) -> NumpyCuckoo:
-        import os
+    def clear(self) -> None:
+        """Delete every blob of this store's filter kind, any round or
+        geometry (a cold rebuild starts from empty filters)."""
+        if not os.path.isdir(self.root):
+            return
+        for name in os.listdir(self.root):
+            if name.startswith(self.filter_cls.BLOB_PREFIX):
+                os.remove(os.path.join(self.root, name))
 
-        p = self.path(bucket, round_id)
-        if round_id < 0 or not os.path.exists(p):
-            return NumpyCuckoo(max(16, self.expected_per_bucket), m=self.m)
-        with open(p, "rb") as f:
-            return NumpyCuckoo.from_bytes(f.read(), self.m)
+    # -- executor-side primitives (no Spark imports at call time) ------
+    def load_bucket(self, bucket: int, round_id: int):
+        filt = self.empty()
+        p = self._path(filt, bucket, round_id)
+        if round_id >= 0 and os.path.exists(p):
+            with open(p, "rb") as f:
+                filt.from_bytes(f.read())
+        return filt
 
-    def write_bucket(self, bucket: int, round_id: int, filt: NumpyCuckoo) -> None:
-        import os
-
+    def write_bucket(self, bucket: int, round_id: int, filt) -> None:
         os.makedirs(self.root, exist_ok=True)
-        p = self.path(bucket, round_id)
+        p = self._path(filt, bucket, round_id)
         tmp = p + f".tmp{os.getpid()}"
         with open(tmp, "wb") as f:
             f.write(filt.to_bytes())
         os.rename(tmp, p)
 
 
-def remove_partitioned_keys(
+def _bucket_of(hashes: np.ndarray, n_buckets: int) -> np.ndarray:
+    """pmod(hash, B) with Spark's non-negative-modulo semantics."""
+    return ((hashes.astype(np.int64) % n_buckets) + n_buckets) % n_buckets
+
+
+def _add(filt, hashes: np.ndarray) -> int:
+    filt.add(hashes)
+    return len(hashes)
+
+
+def _remove(filt, hashes: np.ndarray) -> int:
+    return filt.remove(hashes)
+
+
+def _bucket_pass(
     df: DataFrame,
     hash_col: str,
-    store: CuckooBucketStore,
-    round_id: int,
+    store: BucketStore,
+    op,
+    round_in: int,
+    round_out: int,
+    carry: bool,
 ) -> int:
-    """Delete ``df``'s hashes from the round's cuckoo blobs, in place
-    (executor-side, bucket-aligned — the same shape as
-    :func:`advance_partitioned_bloom`).  The re-crawl policy primitive:
-    URLs whose re-crawl is due are removed from the seen filter so the
-    next round's prefilter passes them as new; the exact anti-join side
-    must drop the same keys from the seen TABLE (policy does both — the
-    filter and the table stay in lockstep, as for inserts).  Returns the
-    number of fingerprints actually removed."""
+    """Apply ``op(filter, hashes) -> n`` to every bucket's filter,
+    entirely on the executors: load round ``round_in``'s blob, apply,
+    write round ``round_out``'s blob.  Returns the sum of ``n``.
+
+    ``df`` is repartitioned by bucket (B-way shuffle of the skinny hash
+    column only — on an Iceberg seen table bucket-partitioned by the
+    same key this shuffle disappears; here it moves 8 bytes/row).  With
+    ``carry`` a skeleton row per bucket guarantees even buckets with no
+    rows carry their cumulative blob forward.  The driver receives only
+    (bucket, n) counters.
+    """
     spark = df.sparkSession
     B = store.n_buckets
     rows = df.select(
         F.pmod(F.col(hash_col), F.lit(B)).cast("int").alias("__bucket"),
         F.col(hash_col).alias("__h"),
+        F.lit(True).alias("__real"),
     )
-    st = store
+    if carry:
+        # skeleton rows use a flag, NOT a null hash — a nullable int64
+        # column arrives in pandas as float64, silently rounding 60-bit
+        # hashes (>2^53) and corrupting the filter (false negatives,
+        # which unlike false positives break the equivalence contract)
+        rows = rows.unionByName(
+            spark.range(B).select(
+                F.col("id").cast("int").alias("__bucket"),
+                F.lit(0).cast("long").alias("__h"),
+                F.lit(False).alias("__real"),
+            )
+        )
 
-    def drop(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        filters: dict[int, NumpyCuckoo] = {}
-        removed: dict[int, int] = {}
+    # the store is plain data (paths + geometry) — the closure ships it
+    # to the executors whole
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        filters: dict[int, object] = {}
+        counts: dict[int, int] = {}
         for pdf in it:
             for b, grp in pdf.groupby("__bucket"):
                 b = int(b)
                 if b not in filters:
-                    filters[b] = st.load_bucket(b, round_id)
-                    removed[b] = 0
-                h = grp["__h"].to_numpy(dtype=np.int64)
-                removed[b] += filters[b].remove(h)
+                    filters[b] = store.load_bucket(b, round_in)
+                    counts[b] = 0
+                h = grp.loc[grp["__real"], "__h"].to_numpy(dtype=np.int64)
+                if len(h):
+                    counts[b] += op(filters[b], h)
         for b, filt in filters.items():
-            st.write_bucket(b, round_id, filt)
+            store.write_bucket(b, round_out, filt)
         if filters:
-            yield pd.DataFrame(
-                {"bucket": list(filters), "n_removed": [removed[b] for b in filters]}
-            )
+            yield pd.DataFrame({"bucket": list(filters), "n": [counts[b] for b in filters]})
 
     stats = (
         rows.repartition(B, "__bucket")
-        .mapInPandas(drop, schema="bucket int, n_removed long")
+        .mapInPandas(run, schema="bucket int, n long")
         .collect()
     )
-    return int(sum(r["n_removed"] for r in stats))
+    return int(sum(r["n"] for r in stats))
+
+
+def advance_partitioned_bloom(
+    seen_delta: DataFrame, hash_col: str, store: BucketStore, round_id: int
+) -> int:
+    """Advance every bucket's cumulative filter to ``round_id`` by adding
+    the round's seen delta to round ``round_id - 1``'s blobs; returns the
+    number of hashes added."""
+    return _bucket_pass(seen_delta, hash_col, store, _add, round_id - 1, round_id, True)
+
+
+def remove_partitioned_keys(
+    df: DataFrame, hash_col: str, store: BucketStore, round_id: int
+) -> int:
+    """Delete ``df``'s hashes from the round's (cuckoo) blobs, in place.
+    The re-crawl policy primitive: URLs whose re-crawl is due are removed
+    from the seen filter so the next round's prefilter passes them as
+    new; the exact anti-join side must drop the same keys from the seen
+    TABLE (policy does both — the filter and the table stay in lockstep,
+    as for inserts).  Returns the number of fingerprints actually
+    removed."""
+    return _bucket_pass(df, hash_col, store, _remove, round_id, round_id, False)
+
+
+def anti_join_seen(
+    frontier: DataFrame,
+    seen: DataFrame,
+    url_col: str = "canon_url",
+    hash_col: str = "url_hash",
+    store: BucketStore | None = None,
+    round_id: int = -1,
+) -> DataFrame:
+    """Rows of ``frontier`` whose (hash, url) is absent from ``seen``.
+
+    Without a ``store``: the plain left-anti join (the correctness
+    baseline).  With one: each row is first tested against its bucket's
+    round-``round_id`` filter, map-side wherever the frontier rows
+    already are (no extra shuffle; each task lazily loads only the
+    bucket blobs its batches touch).  Negatives bypass the join (the
+    filters have no false negatives); positives take the EXACT (hash,
+    url) anti-join, so the result is identical either way.
+    """
+    seen_keys = seen.select(hash_col, url_col)
+    if store is None:
+        return frontier.join(seen_keys, on=[hash_col, url_col], how="left_anti")
+
+    from pyspark.sql import types as T
+
+    n_buckets = store.n_buckets
+
+    def prefilter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache: dict[int, object] = {}
+        for pdf in it:
+            h = pdf[hash_col].to_numpy(dtype=np.int64)
+            out = np.zeros(len(h), dtype=bool)
+            buckets = _bucket_of(h, n_buckets)
+            for b in np.unique(buckets):
+                b = int(b)
+                if b not in cache:
+                    cache[b] = store.load_bucket(b, round_id)
+                mask = buckets == b
+                out[mask] = cache[b].might_contain(h[mask])
+            pdf = pdf.copy()
+            pdf["__maybe_seen"] = out
+            yield pdf
+
+    out_schema = T.StructType(
+        list(frontier.schema.fields) + [T.StructField("__maybe_seen", T.BooleanType())]
+    )
+    tagged = frontier.mapInPandas(prefilter, schema=out_schema)
+    definitely_new = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
+    maybe = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
+    survivors = maybe.join(seen_keys, on=[hash_col, url_col], how="left_anti")
+    return definitely_new.unionByName(survivors)
+

@@ -139,3 +139,33 @@ def test_round_manifests_record_step_walls(spark_result):
     steps = {"articles", "cache_fill", "seen", "bloom", "crawl_logs", "frontier"}
     for r in range(store.last_committed_round() + 1):
         assert set(store.manifest(r)["step_secs"]) == steps, r
+
+
+def test_failed_round_releases_its_caches(spark, tmp_path):
+    """A round that fails mid-write (round 0's frontier write) still
+    releases every cache it made: only the crawler-lifetime caches (the
+    pages scan and the robots dim) are left."""
+    jsc = spark.sparkContext._jsc
+
+    def persistent_rdds():
+        return set(jsc.getPersistentRDDs().keys())
+
+    # a corpus of its own, so no other crawler shares its cached plans
+    paths = generate_corpus(str(tmp_path / "c"), n_pages=120, n_hosts=4, seed=7)
+    store = RoundStore(str(tmp_path / "store"))
+    write_round = store.write_round
+
+    def failing_write_round(table, round_id, *a, **k):
+        if table == "frontier" and round_id == 0:
+            raise RuntimeError("injected frontier write failure")
+        return write_round(table, round_id, *a, **k)
+
+    store.write_round = failing_write_round
+    before = persistent_rdds()
+    crawler = FrontierCrawler(spark, paths["pages"], paths["seeds"], store, CFG)
+    with pytest.raises(RuntimeError, match="injected"):
+        crawler.run(resume=False)
+    assert store.last_committed_round() == -1
+    crawler.robots_dim.unpersist()
+    crawler.pages.unpersist()
+    assert persistent_rdds() - before == set()

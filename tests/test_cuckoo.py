@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from newscrawler_spark.operators.seen import (
-    CuckooBucketStore,
+    BucketStore,
     NumpyCuckoo,
     advance_partitioned_bloom,
     anti_join_seen,
@@ -47,11 +47,11 @@ def test_cuckoo_serialization_roundtrip():
     h = rng.integers(0, 1 << 60, size=3000, dtype=np.int64)
     f = NumpyCuckoo(expected=3000)
     f.add(h)
-    g = NumpyCuckoo.from_bytes(f.to_bytes(), f.m)
+    g = NumpyCuckoo(expected=3000).from_bytes(f.to_bytes())
     assert g.might_contain(h).all()
     assert np.array_equal(f.table, g.table)
     with pytest.raises(ValueError):
-        NumpyCuckoo.from_bytes(f.to_bytes(), f.m * 2)
+        NumpyCuckoo(expected=6000).from_bytes(f.to_bytes())
 
 
 def test_cuckoo_overload_saturates_never_false_negative():
@@ -64,7 +64,7 @@ def test_cuckoo_overload_saturates_never_false_negative():
     assert f.might_contain(h).all()
     assert f.saturated  # degraded, not wrong
     # serialization preserves the degradation flag
-    g = NumpyCuckoo.from_bytes(f.to_bytes(), f.m)
+    g = NumpyCuckoo(expected=256).from_bytes(f.to_bytes())
     assert g.might_contain(h).all()
 
 
@@ -102,9 +102,10 @@ def frontier_and_seen(spark):
 def test_partitioned_cuckoo_equivalence(spark, frontier_and_seen, tmp_path):
     """Bucket-aligned cuckoo filters (B=4) ≡ exact anti-join — the same
     contract as test_partitioned_bloom_equivalence, through the SAME
-    generic advance/apply machinery (duck-typed store)."""
+    advance/apply machinery (one BucketStore, filter_cls=NumpyCuckoo)."""
     frontier, seen = frontier_and_seen
-    store = CuckooBucketStore(str(tmp_path / "cb"), n_buckets=4, expected_per_bucket=512)
+    store = BucketStore(str(tmp_path / "cb"), n_buckets=4, expected_per_bucket=512,
+                        filter_cls=NumpyCuckoo)
     n = advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
     assert n == seen.count()
     assert store.complete(0)
@@ -121,7 +122,8 @@ def test_partitioned_cuckoo_remove_readmits(spark, frontier_and_seen, tmp_path):
     from pyspark.sql import functions as F
 
     frontier, seen = frontier_and_seen
-    store = CuckooBucketStore(str(tmp_path / "cb"), n_buckets=3, expected_per_bucket=512)
+    store = BucketStore(str(tmp_path / "cb"), n_buckets=3, expected_per_bucket=512,
+                        filter_cls=NumpyCuckoo)
     advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
     due = seen.filter(F.col("url_hash") % 30 == 0)  # subset due for re-crawl
     n_due = due.count()

@@ -9,8 +9,9 @@ import numpy as np
 import pytest
 
 from newscrawler_spark.operators.seen import (
-    BloomBucketStore,
+    BucketStore,
     NumpyBloom,
+    NumpyCuckoo,
     advance_partitioned_bloom,
     anti_join_seen,
 )
@@ -29,15 +30,14 @@ def test_bloom_no_false_negatives():
 
 def test_bloom_union_and_state_roundtrip():
     a = NumpyBloom(expected=100, fpp=1e-3)
-    b = NumpyBloom(expected=100, fpp=1e-3)
-    xs = np.arange(50, dtype=np.int64)
-    ys = np.arange(50, 100, dtype=np.int64)
+    xs = np.arange(100, dtype=np.int64)
     a.add(xs)
-    b.add(ys)
-    a.union(b)
-    assert a.might_contain(np.arange(100, dtype=np.int64)).all()
-    c = NumpyBloom.from_state(a.words.copy(), a.m, a.k)
+    c = NumpyBloom(expected=100, fpp=1e-3).from_bytes(a.to_bytes())
     assert c.might_contain(xs).all()
+    assert np.array_equal(a.words, c.words)
+    c.add(np.arange(100, 200, dtype=np.int64))  # the loaded filter is writable
+    with pytest.raises(ValueError):
+        NumpyBloom(expected=1000, fpp=1e-3).from_bytes(a.to_bytes())
 
 
 @pytest.fixture(scope="module")
@@ -61,8 +61,8 @@ def test_anti_join_bloom_equivalence(spark, frontier_and_seen, tmp_path):
     without = {r["url_hash"] for r in anti_join_seen(frontier, seen).collect()}
     assert len(without) == frontier.count() - seen.count()
     for n_buckets in (1, 3):
-        store = BloomBucketStore(str(tmp_path / f"bb{n_buckets}"), n_buckets=n_buckets,
-                                 expected_per_bucket=1000, fpp=1e-3)
+        store = BucketStore(str(tmp_path / f"bb{n_buckets}"), n_buckets=n_buckets,
+                            expected_per_bucket=1000)
         advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
         with_bloom = anti_join_seen(frontier, seen, store=store, round_id=0)
         assert {r["url_hash"] for r in with_bloom.collect()} == without, n_buckets
@@ -73,8 +73,7 @@ def test_partitioned_bloom_equivalence(spark, frontier_and_seen, tmp_path):
     the same pure-optimization contract as the single bloom, with the
     bitsets built/loaded entirely by executor tasks (no driver bitset)."""
     frontier, seen = frontier_and_seen
-    store = BloomBucketStore(str(tmp_path / "bb"), n_buckets=4,
-                             expected_per_bucket=512, fpp=1e-3)
+    store = BucketStore(str(tmp_path / "bb"), n_buckets=4, expected_per_bucket=512)
     n = advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
     assert n == seen.count()
     assert store.complete(0)
@@ -89,8 +88,7 @@ def test_partitioned_bloom_incremental_rounds(spark, tmp_path):
     buckets still carry forward (skeleton rows)."""
     from pyspark.sql import functions as F
 
-    store = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
-                             expected_per_bucket=256, fpp=1e-3)
+    store = BucketStore(str(tmp_path / "bb"), n_buckets=3, expected_per_bucket=256)
     mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.concat(F.lit("u"), "id").alias("canon_url"), F.col("id").alias("url_hash")
     )
@@ -143,34 +141,35 @@ def test_hash_collision_does_not_drop_urls(spark, tmp_path):
         [("https://a.com/x", 7)], "canon_url string, url_hash long"
     )
     for n_buckets in (1, 3):
-        store = BloomBucketStore(str(tmp_path / f"bb{n_buckets}"), n_buckets=n_buckets,
-                                 expected_per_bucket=16, fpp=1e-3)
+        store = BucketStore(str(tmp_path / f"bb{n_buckets}"), n_buckets=n_buckets,
+                            expected_per_bucket=16)
         advance_partitioned_bloom(seen, "url_hash", store, round_id=0)
         out = anti_join_seen(frontier, seen, store=store, round_id=0).collect()
         assert [r["canon_url"] for r in out] == ["https://b.com/y"], n_buckets
 
 
 def test_partitioned_bloom_config_change_invalidates_blobs(spark, tmp_path):
-    """Blobs written under a different bloom geometry must be invisible
-    (complete() false -> caller rebuilds), never reinterpreted: a bitset
+    """Blobs written under a different filter geometry must be invisible
+    (complete() false -> caller rebuilds), never reinterpreted: a filter
     read with the wrong m yields false NEGATIVES, which the exact-anti-
-    join-on-positives design cannot recover from."""
+    join-on-positives design cannot recover from.  Both filter classes."""
     from pyspark.sql import functions as F
 
     mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.concat(F.lit("u"), "id").alias("canon_url"), F.col("id").alias("url_hash")
     )
-    old = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
-                           expected_per_bucket=4096, fpp=1e-3)
-    advance_partitioned_bloom(mk(0, 60), "url_hash", old, 0)
-    assert old.complete(0)
-    # same root, smaller expected -> different m: old blobs must not match
-    new = BloomBucketStore(str(tmp_path / "bb"), n_buckets=3,
-                           expected_per_bucket=256, fpp=1e-3)
-    assert new.m != old.m
-    assert not new.complete(0)
-    # load_bucket under the new geometry returns a FRESH (empty) bloom,
-    # not a misread of the old bitset
-    assert not new.load_bucket(0, 0).might_contain(
-        __import__("numpy").arange(0, 60, 3)
-    ).any()
+    for filter_cls in (NumpyBloom, NumpyCuckoo):
+        root = str(tmp_path / filter_cls.__name__)
+        old = BucketStore(root, n_buckets=3, expected_per_bucket=4096, filter_cls=filter_cls)
+        advance_partitioned_bloom(mk(0, 60), "url_hash", old, 0)
+        assert old.complete(0)
+        # same root, smaller expected -> different m: old blobs must not match
+        new = BucketStore(root, n_buckets=3, expected_per_bucket=256, filter_cls=filter_cls)
+        assert new.empty().m != old.empty().m
+        assert not new.complete(0), filter_cls
+        # load_bucket under the new geometry returns a FRESH (empty)
+        # filter, not a misread of the old blob
+        assert not new.load_bucket(0, 0).might_contain(np.arange(0, 60, 3)).any()
+        # clear() removes the old geometry's blobs too
+        new.clear()
+        assert not old.complete(0)

@@ -1,10 +1,10 @@
 """One-off: seen-filter bucket-count cost parity on the 4-executor
 cluster leg.
 
-The crawler's seen filter is the bucket-aligned bloom store
-(`operators/seen.py` BloomBucketStore, SURVEY §7.3): per-bucket bitsets
-advanced and applied by executor tasks against shared-storage blobs, no
-driver-assembled bitset.  The recorded scaling legs run one bucket
+The crawler's seen filter is the bucket-aligned filter store
+(`operators/seen.py` BucketStore, bloom by default, SURVEY §7.3):
+per-bucket filters advanced and applied by executor tasks against
+shared-storage blobs, no driver-assembled filter.  The recorded scaling legs run one bucket
 (bloom_buckets = 1, the default); the 10^10-seen shape shards it.  This
 probe runs the SAME 1M-page bulk leg at B=1 vs B=16 so the cost of
 sharding is measured, not argued.
