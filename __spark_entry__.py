@@ -43,6 +43,7 @@ from newscrawler_spark.functions.text import (  # noqa: E402
     quality_score,
     ws_token_count,
 )
+from newscrawler_spark.operators.events import epoch_day  # noqa: E402
 
 # ---------------------------------------------------------------------------
 
@@ -2230,7 +2231,7 @@ def q_events_topk_daily(spark, sf_dir):
     from pyspark.sql import Window
 
     ev = _t(spark, sf_dir, "events").select(
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")
+        epoch_day("unix_micros(CAST(ts AS TIMESTAMP))")
         .cast("long")
         .alias("day"),
         "user_id",
@@ -2273,7 +2274,7 @@ def q_events_dau_wau(spark, sf_dir):
     pairs, never the corpus.  Two aggregates over one distinct
     reduction; both engines replay the identical attribution."""
     ev = _t(spark, sf_dir, "events").select(
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")
+        epoch_day("unix_micros(CAST(ts AS TIMESTAMP))")
         .cast("long")
         .alias("day"),
         "user_id",
@@ -3500,8 +3501,8 @@ def q_streaming_cusum(spark, sf_dir):
     (cusum_over_daily — CUSUM needs the full day history, so it is
     batch-over-sink by construction; the streaming part is exactly the
     state that must be maintained continuously).  Day ids share the
-    batch path's unix_micros div 86400000000 contract, so the oracle
-    is the SAME cusum chain over a daily CTE with the finalize cut
+    batch path's day contract (epoch_day), so the oracle is
+    the SAME cusum chain over a daily CTE with the finalize cut
     (day end ≤ max(ts) − watermark)."""
     import shutil
 
@@ -7726,7 +7727,7 @@ def q_events_rolling(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")
+        epoch_day("unix_micros(CAST(ts AS TIMESTAMP))")
         .cast("long")
         .alias("day"),
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),

@@ -300,7 +300,6 @@ def main() -> None:
     m = _re.search(r"sf([0-9.]+)$", os.path.basename(sf_dir.rstrip("/")))
     sf = float(m.group(1)) if m else 0.1
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     from newscrawler_spark.session import get_spark
 
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)

@@ -9,9 +9,13 @@ locale dependence — shared verbatim by:
 
   * the synthetic corpus generator (ground-truth ``pages.text``),
   * the pure-Python crawl oracle, and
-  * the Spark pandas UDF (``extract_udf_frame`` via ``mapInPandas``).
+  * the crawler's Arrow-batched kernel (``extract_batch``).
 
 so "byte-identical extracted text per url" is testable and meaningful.
+The link-graph operators (operators/graph.py) need only step 5: their
+``mapInPandas`` body ``links_map_in_pandas`` runs steps 1, 2 and 5
+through the same ``_out_links`` helper ``extract_page`` calls, so their
+edges equal the crawler's out-links by construction.
 
 Extraction spec (frozen):
   1. decode UTF-8 (errors="replace")
@@ -162,6 +166,21 @@ def resolve_link(base_url: str, href: str) -> str | None:
     return canonicalize_url(f"{scheme}://{host}{base_dir}{href}")
 
 
+def _out_links(body: str, url: str) -> list[str]:
+    """Spec step 5 over the boilerplate-stripped ``body``: <a href>
+    targets, then the first ``MAX_FEED_ENTRIES`` feed <link> entries,
+    resolved against ``url``, deduped in document order."""
+    links: list[str] = []
+    seen: set[str] = set()
+    hrefs = _HREF_RE.findall(body) + _FEED_ITEM_RE.findall(body)[:MAX_FEED_ENTRIES]
+    for href in hrefs:
+        resolved = resolve_link(url, href)
+        if resolved is not None and resolved not in seen:
+            seen.add(resolved)
+            links.append(resolved)
+    return links
+
+
 def extract_page(html_bytes: bytes, url: str, js_render: bool = False) -> dict:
     """Frozen extractor: html bytes + url → dict of extracted fields.
 
@@ -182,15 +201,7 @@ def extract_page(html_bytes: bytes, url: str, js_render: bool = False) -> dict:
             for b in _ARTICLE_BODY_RE.findall(blk)
         ]
     text = collapse_ws(" ".join(paras))
-    links: list[str] = []
-    seen: set[str] = set()
-    hrefs = list(_HREF_RE.findall(body))
-    hrefs += _FEED_ITEM_RE.findall(body)[:MAX_FEED_ENTRIES]
-    for href in hrefs:
-        resolved = resolve_link(url, href)
-        if resolved is not None and resolved not in seen:
-            seen.add(resolved)
-            links.append(resolved)
+    links = _out_links(body, url)
     authors = [collapse_ws(a) for a in _META_AUTHOR_RE.findall(raw)]
     m = _META_PUBLISHED_RE.search(raw)
     published = m.group(1) if m else None
@@ -252,12 +263,6 @@ def is_spa(html_text: str, text: str) -> bool:
 
 # --- Spark vectorized implementation -----------------------------------
 
-# Output schema fragment appended by the extraction stage.
-EXTRACT_FIELDS = (
-    "title string, text string, out_links array<string>, "
-    "authors array<string>, published string, images array<string>"
-)
-
 
 def extract_batch(
     urls: pd.Series, htmls: pd.Series, strategies: pd.Series | None = None
@@ -297,12 +302,22 @@ def extract_batch(
     return pd.DataFrame(out)
 
 
-def extract_map_in_pandas(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """``mapInPandas`` body: pass through all input columns, append the
-    extracted fields.  Used as
-    ``df.mapInPandas(extract_map_in_pandas, schema=...)``."""
+#: ``mapInPandas`` schema of :func:`links_map_in_pandas`
+LINK_FIELDS = "url string, out_links array<string>"
+
+
+def links_map_in_pandas(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` body of the link-graph operators: spec steps 1, 2
+    and 5 only (decode, boilerplate strip, out-links), so the out-links
+    equal ``extract_page(...)["out_links"]`` without computing the other
+    fields.  Reads ``url`` and ``html``; emits :data:`LINK_FIELDS` — the
+    html does not travel back to the JVM.  A null html has no links."""
     for pdf in it:
-        ext = extract_batch(pdf["url"], pdf["html"])
-        for col in ext.columns:
-            pdf[col] = ext[col]
-        yield pdf
+        links = []
+        for url, blob in zip(pdf["url"].tolist(), pdf["html"].tolist()):
+            if blob is None:
+                links.append([])
+                continue
+            body = _BOILER_RE.sub(" ", bytes(blob).decode("utf-8", errors="replace"))
+            links.append(_out_links(body, url))
+        yield pd.DataFrame({"url": pdf["url"].tolist(), "out_links": links})

@@ -285,12 +285,22 @@ def zscore_anomalies(
 _DAY_US = 86_400_000_000
 
 
+def epoch_day(us: str):
+    """Integer epoch day of the microsecond SQL expression ``us`` — the
+    one spelling of every Spark-side day id.  Spark's ``div`` and the
+    DuckDB twins' integer ``//`` both truncate toward zero, so the
+    engines agree on every instant; before 1970 an instant off a day
+    boundary gets the next day's id in both, and a floored form must
+    change here and in the twins together."""
+    return F.expr(f"{us} div {_DAY_US}")
+
+
 def retention_cohorts(events: DataFrame, user_col: str = "user_id") -> DataFrame:
     """Cohort retention matrix — the product-analytics companion of
     :func:`funnel`: users grouped by the day of their FIRST event
     (cohort), counted distinct on each later activity day, keyed by the
     day offset.  Output ``(cohort_day, day_offset, n_users)`` with
-    integer epoch-day indexes (``epoch_us div 86400e6`` — exact in any
+    integer epoch-day indexes (:func:`epoch_day` — exact in any
     engine; date types and their timezone edges never enter the
     contract).
 
@@ -305,7 +315,7 @@ def retention_cohorts(events: DataFrame, user_col: str = "user_id") -> DataFrame
     d = events.select(
         F.col(user_col).alias("user_id"), _us().alias("us")
     ).select(
-        "user_id", F.expr(f"us div {_DAY_US}").cast("long").alias("day")
+        "user_id", epoch_day("us").cast("long").alias("day")
     )
     d = d.withColumn("cohort", F.min("day").over(w))
     return (
@@ -336,7 +346,7 @@ def pivot_daily_counts(
     (map-side partial counts), and the fixed column list keeps the
     schema data-independent; absent (day, type) cells are 0, not
     null, so the report is total.  Output ``(day, n_<type>...)``."""
-    day = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")
+    day = epoch_day("unix_micros(CAST(ts AS TIMESTAMP))")
     return (
         events.select(day.cast("long").alias("day"), "event_type")
         .groupBy("day")
@@ -440,7 +450,7 @@ def cusum_changepoints(events: DataFrame) -> DataFrame:
     (days × types rows, never event rows) on a single event_type
     exchange.  Returns (event_type, day, daily_cents, k_target,
     cusum_pos, is_alarm)."""
-    day = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000")
+    day = epoch_day("unix_micros(CAST(ts AS TIMESTAMP))")
     cents = F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
     daily = (
         events.select("event_type", day.cast("long").alias("day"), cents.alias("cents"))

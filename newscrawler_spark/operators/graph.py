@@ -23,6 +23,17 @@ The driver-side loop is bounded and tiny (a handful of rounds); all
 row-scaled work stays distributed.  (GraphFrames' large-star/small-star
 is the same idea with a 2-phase split; this 1-phase variant keeps the
 dependency surface to plain DataFrames.)
+
+The link-graph operators (host PageRank, HITS, label propagation, seed
+depth, triangles, k-core, ...) read their edges through one
+``mapInPandas`` pass of the links-only extraction kernel
+(functions/extract.links_map_in_pandas: the frozen out-links, no other
+field, no html back to the JVM).  The fixed-round ones run through
+``_iterate``: the O(host-graph) input is checkpointed once, each
+round's small state vector is cut with an eager localCheckpoint (the
+pattern connected components uses), and the blocks of every round but
+the last and of the inputs are released when the rounds end, so a
+K-round operator plans K one-round queries and leaves nothing cached.
 """
 
 from __future__ import annotations
@@ -90,11 +101,52 @@ def connected_components(
 _HOST_RE = r"^[a-z]+://([^/?#]*)"
 
 
+def _links(pages: DataFrame) -> DataFrame:
+    """(url, out_links) per page through the links-only extraction
+    kernel (functions/extract.links_map_in_pandas)."""
+    from ..functions.extract import LINK_FIELDS, links_map_in_pandas
+
+    return pages.select("url", "html").mapInPandas(links_map_in_pandas, schema=LINK_FIELDS)
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a frame made by ``localCheckpoint``."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _iterate(
+    state: DataFrame, rounds: int, *steps, release: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """``rounds`` synchronous rounds over a small state vector: each
+    round applies ``steps`` in order, and each step's result is cut with
+    an eager localCheckpoint before the next reads it, so every plan is
+    one step deep; the cut before it is released.  The frames in
+    ``release`` (checkpointed inputs the rounds read) are released at
+    the end, so only the returned state stays materialized — and
+    nothing when a step fails."""
+    first = state
+    try:
+        for _ in range(rounds):
+            for step in steps:
+                prev, state = state, step(state).localCheckpoint(eager=True)
+                if prev is not first:
+                    _release(prev)
+    except BaseException:
+        if state is not first:
+            _release(state)
+        raise
+    finally:
+        for df in release:
+            _release(df)
+    return state
+
+
 def host_link_edges(pages: DataFrame, max_links_per_page: int = 100) -> DataFrame:
     """Host-level link graph from the raw pages table.
 
     Extracts every page's out-links with the frozen extraction contract
-    (functions/extract.extract_page: first-occurrence dedup per page),
+    (extract_page's out-links, first-occurrence dedup per page, through
+    the links-only kernel functions/extract.links_map_in_pandas),
     caps them at `max_links_per_page` (the reference's link cap,
     scraper_gui.py:483-486 — same cap the crawler applies at its explode
     site), resolves each endpoint to its host, and keeps only edges
@@ -107,13 +159,7 @@ def host_link_edges(pages: DataFrame, max_links_per_page: int = 100) -> DataFram
     The result is O(host-graph), orders of magnitude smaller than the
     pages table, so everything downstream is cheap.
     """
-    from ..functions.extract import EXTRACT_FIELDS, extract_map_in_pandas
-
-    meta = pages.select("url", "html")
-    ext = meta.mapInPandas(
-        extract_map_in_pandas, schema=f"url string, html binary, {EXTRACT_FIELDS}"
-    )
-    links = ext.select(
+    links = _links(pages).select(
         F.regexp_extract("url", _HOST_RE, 1).alias("src"),
         F.explode(F.slice("out_links", 1, max_links_per_page)).alias("link"),
     ).select("src", F.regexp_extract("link", _HOST_RE, 1).alias("dst"))
@@ -152,44 +198,50 @@ def host_pagerank(
 
     Hosts with no out-edges simply don't redistribute (no dangling
     teleport term — spelled identically in the DuckDB oracle).  The
-    fixed `iterations` unrolls into K tiny self-joins over the
-    PERSISTED host-edge aggregate (Catalyst re-executes unreferenced
-    identical subtrees — CLAUDE.md — so the O(hosts^2)-bounded edge
-    table is cached; the O(n_pages) extraction runs once).
+    fixed `iterations` run through :func:`_iterate`: the O(n_pages)
+    extraction runs once into the checkpointed O(host-graph) edge table
+    (with each source's out-weight), and each round's rank vector is
+    checkpointed, so no round re-plans the rounds before it.
 
     Scale: rank iterations run on the host graph (~10^7 rows at
-    100 TB), never on pages; each iteration is a broadcast join of the
-    |hosts|-row rank vector against the persisted edges plus one
-    groupBy(dst) on the host graph.
+    100 TB), never on pages.  Each round broadcasts the |hosts|-row
+    rank vector into the edges and has one exchange: the contributions
+    plus a zero row per host (so hosts without in-links keep the
+    teleport mass) grouped by host.
     """
-    edges = host_link_edges(pages, max_links_per_page).persist()
-    outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("outw"))
-    ew = edges.join(outw, "src").persist()
+    from pyspark.sql import Window
+
+    ew = (
+        host_link_edges(pages, max_links_per_page)
+        .withColumn("outw", F.sum("w").over(Window.partitionBy("src")).cast("bigint"))
+        .localCheckpoint(eager=True)
+    )
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
     teleport = scale - (scale * damping_pct) // 100
-    ranks = hosts.select("host", F.lit(scale).cast("bigint").alias("rank"))
-    for _ in range(iterations):
-        contrib = (
-            ew.join(
-                F.broadcast(ranks.withColumnRenamed("host", "src")), "src"
-            )
-            .select(
-                F.col("dst").alias("host"),
-                F.expr("(rank * w) div outw").alias("c"),
-            )
+
+    def _round(ranks: DataFrame) -> DataFrame:
+        contrib = ew.join(
+            F.broadcast(ranks.withColumnRenamed("host", "src")), "src"
+        ).select(
+            F.col("dst").alias("host"),
+            F.expr("(rank * w) div outw").alias("c"),
+        )
+        return (
+            contrib.unionByName(ranks.select("host", F.lit(0).cast("bigint").alias("c")))
             .groupBy("host")
-            .agg(F.sum("c").cast("bigint").alias("s"))
+            .agg(F.sum("c").alias("s"))
+            .select(
+                "host",
+                (F.lit(teleport) + F.expr(f"({damping_pct} * s) div 100"))
+                .cast("bigint")
+                .alias("rank"),
+            )
         )
-        ranks = hosts.join(contrib, "host", "left").select(
-            "host",
-            (
-                F.lit(teleport)
-                + F.expr(f"({damping_pct} * coalesce(s, 0)) div 100")
-            ).cast("bigint").alias("rank"),
-        )
-    return ranks
+
+    ranks = hosts.select("host", F.lit(scale).cast("bigint").alias("rank"))
+    return _iterate(ranks, iterations, _round, release=(ew,))
 
 
 #: anchor extraction — group 1 = href target, group 2 = anchor text.
@@ -288,54 +340,56 @@ def host_hits(
     iteration, and the per-step rescale stops any compounding.
 
     Scale shape: identical to PageRank — the O(n_pages) extraction
-    builds the persisted O(host-graph) edge aggregate once; each
-    unrolled iteration is two broadcast joins of the |hosts|-row score
-    vector into the edges plus two host-bounded groupBys; the
-    normalizing max is a whole-frame window over the AGGREGATE (never
-    corpus rows — the domain_mix lesson, PLANS.md).
+    builds the checkpointed O(host-graph) edge table once, and
+    :func:`_iterate` checkpoints the |hosts|-row (host, auth, hub)
+    vector after each half-step.  A half-step broadcasts the vector into
+    the edges, groups the contributions plus a zero row per host (which
+    also carries the other score) by host, and normalizes by a
+    whole-frame max over that AGGREGATE (never corpus rows — the
+    domain_mix lesson, PLANS.md).
     """
-    from pyspark.sql import Window
-
-    edges = host_link_edges(pages, max_links_per_page).persist()
+    edges = host_link_edges(pages, max_links_per_page).localCheckpoint(eager=True)
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
-    whole = Window.partitionBy()
-    hub = hosts.select("host", F.lit(scale).cast("bigint").alias("hub"))
 
-    def _step(vec: DataFrame, score: str, join_on: str, group_to: str) -> DataFrame:
-        raw = (
-            edges.join(
-                F.broadcast(
-                    vec.select(F.col("host").alias(join_on), F.col(score).alias("_s"))
-                ),
-                join_on,
-            )
-            .select(F.col(group_to).alias("host"), (F.col("_s") * F.col("w")).alias("c"))
-            .groupBy("host")
-            .agg(F.sum("c").cast("bigint").alias("raw"))
+    def _half(vec: DataFrame, score: str, other: str, join_on: str, group_to: str):
+        """`score` from `other` spread along the edges; `other` kept."""
+        contrib = edges.join(
+            F.broadcast(
+                vec.select(F.col("host").alias(join_on), F.col(other).alias("_s"))
+            ),
+            join_on,
+        ).select(
+            F.col(group_to).alias("host"),
+            (F.col("_s") * F.col("w")).alias("c"),
+            F.lit(None).cast("bigint").alias(other),
         )
-        norm = raw.select(
+        zero = vec.select("host", F.lit(0).cast("bigint").alias("c"), other)
+        raw = (
+            contrib.unionByName(zero)
+            .groupBy("host")
+            .agg(F.sum("c").alias("raw"), F.max(other).alias(other))
+        )
+        return raw.select(
             "host",
+            other,
             F.expr(f"(raw * {scale}) div greatest(max(raw) over (), 1)")
             .cast("bigint")
             .alias(score),
         )
-        return hosts.join(norm, "host", "left").select(
-            "host", F.coalesce(score, F.lit(0).cast("bigint")).alias(score)
-        )
 
-    for _ in range(iterations):
-        auth = _step(hub, "hub", "src", "dst").withColumnRenamed("hub", "auth")
-        hub = _step(auth, "auth", "dst", "src").withColumnRenamed("auth", "hub")
-    return (
-        hosts.join(auth, "host", "left")
-        .join(hub, "host", "left")
-        .select(
-            "host",
-            F.coalesce("auth", F.lit(0)).cast("bigint").alias("auth"),
-            F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
-        )
+    vec = hosts.select(
+        "host",
+        F.lit(0).cast("bigint").alias("auth"),
+        F.lit(scale).cast("bigint").alias("hub"),
+    )
+    return _iterate(
+        vec,
+        iterations,
+        lambda v: _half(v, "auth", "hub", "src", "dst"),
+        lambda v: _half(v, "hub", "auth", "dst", "src"),
+        release=(edges,),
     )
 
 
@@ -538,13 +592,8 @@ def page_link_edges(pages: DataFrame, max_links_per_page: int = 100) -> DataFram
     url key (never broadcast; at 10^10 pages a broadcast would be the
     bug), which is the same single equi-shuffle family the frontier's
     seen anti-join uses."""
-    from ..functions.extract import EXTRACT_FIELDS, extract_map_in_pandas
-
-    ext = pages.select("url", "html").mapInPandas(
-        extract_map_in_pandas, schema=f"url string, html binary, {EXTRACT_FIELDS}"
-    )
     links = (
-        ext.select(
+        _links(pages).select(
             F.col("url").alias("a"),
             F.explode(F.slice("out_links", 1, max_links_per_page)).alias("b"),
         )
@@ -581,10 +630,13 @@ def host_label_propagation(
     discipline as PageRank/HITS (the oracle replays the same unroll,
     so engines agree even before convergence).
 
-    Scale: every round is one join of the |hosts|-row label vector
-    (broadcast) against the persisted undirected host-edge aggregate +
-    one groupBy(host, label) — O(host-graph), never O(pages); the
-    extraction pass runs once.
+    Scale: the extraction pass runs once, into the checkpointed
+    undirected host-edge table; :func:`_iterate` checkpoints the
+    |hosts|-row label vector after every round.  A round broadcasts the
+    label vector into the edges and has one exchange: the votes are
+    repartitioned on host, so the (host, label) vote sum and the
+    per-host pick window both run inside it — O(host-graph), never
+    O(pages).
 
     Returns (host, community, community_size)."""
     from pyspark.sql import Window
@@ -595,14 +647,14 @@ def host_label_propagation(
         .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b"), "w"))
         .groupBy("a", "b")
         .agg(F.sum("w").cast("bigint").alias("w"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
-    labels = hosts.select("host", F.col("host").alias("label"))
     pick = Window.partitionBy("host").orderBy(F.desc("votes"), F.asc("label"))
-    for _ in range(iterations):
+
+    def _round(labels: DataFrame) -> DataFrame:
         nb = und.join(
             F.broadcast(labels.withColumnRenamed("host", "b")), "b"
         ).select(F.col("a").alias("host"), "label", F.col("w").alias("votes"))
@@ -611,14 +663,22 @@ def host_label_propagation(
         )
         agg = (
             nb.unionByName(self_votes)
+            .repartition("host")
             .groupBy("host", "label")
             .agg(F.sum("votes").cast("bigint").alias("votes"))
         )
-        labels = (
+        return (
             agg.withColumn("_rk", F.row_number().over(pick))
             .filter(F.col("_rk") == 1)
             .select("host", "label")
         )
+
+    labels = _iterate(
+        hosts.select("host", F.col("host").alias("label")),
+        iterations,
+        _round,
+        release=(und,),
+    )
     size_w = Window.partitionBy("community")
     return labels.select("host", F.col("label").alias("community")).withColumn(
         "community_size", F.count(F.lit(1)).over(size_w).cast("long")
@@ -647,34 +707,35 @@ def host_seed_depth(
     so unlike k-core there is no convergence to witness — hosts beyond
     the cap are absent by definition.
 
-    Scale: each hop is one broadcast of the |reached-hosts|-row
-    distance vector against the persisted host-edge aggregate + one
-    groupBy(host) min — O(host-graph) per hop, pages scanned once.
+    Scale: the extraction pass runs once, into the checkpointed
+    host-edge table; :func:`_iterate` checkpoints the distance vector
+    after every hop.  A hop broadcasts the |reached-hosts|-row vector
+    into the edges and has one exchange, the groupBy(host) min —
+    O(host-graph) per hop, pages scanned once.
 
     Returns (host, depth) for hosts reached within ``hops``."""
-    edges = host_link_edges(pages, max_links_per_page).persist()
+    edges = host_link_edges(pages, max_links_per_page).localCheckpoint(eager=True)
     hosts = pages.select(
         F.regexp_extract("url", _HOST_RE, 1).alias("host")
     ).distinct()
+
+    def _hop(dist: DataFrame) -> DataFrame:
+        stepped = edges.join(
+            F.broadcast(dist.withColumnRenamed("host", "src")), "src"
+        ).select(F.col("dst").alias("host"), (F.col("depth") + 1).alias("depth"))
+        return (
+            dist.unionByName(stepped)
+            .groupBy("host")
+            .agg(F.min("depth").cast("long").alias("depth"))
+        )
+
     dist = (
         seeds.select(F.col("domain").alias("host"))
         .distinct()
         .join(hosts, "host", "left_semi")
         .select("host", F.lit(0).cast("long").alias("depth"))
     )
-    for _ in range(hops):
-        stepped = (
-            edges.join(
-                F.broadcast(dist.withColumnRenamed("host", "src")), "src"
-            )
-            .select(F.col("dst").alias("host"), (F.col("depth") + 1).alias("depth"))
-        )
-        dist = (
-            dist.unionByName(stepped)
-            .groupBy("host")
-            .agg(F.min("depth").cast("long").alias("depth"))
-        )
-    return dist
+    return _iterate(dist, hops, _hop, release=(edges,))
 
 
 def kcore_from_edges(
@@ -695,7 +756,6 @@ def kcore_from_edges(
     the true core at 100× (under-peeling admits link-farm chains), so
     non-convergence raises loudly instead of shipping a wrong cut."""
     und = und.localCheckpoint(eager=True)
-    core = und.select(F.col("a").alias("v")).distinct()
 
     def _peel(cur: DataFrame) -> DataFrame:
         return (
@@ -705,11 +765,9 @@ def kcore_from_edges(
             .agg(F.count(F.lit(1)).alias("deg"))  # und is distinct pairs
             .where(F.col("deg") >= k)
             .select(F.col("a").alias("v"))
-            .localCheckpoint(eager=True)
         )
 
-    for _ in range(iterations):
-        core = _peel(core)
+    core = _iterate(und.select(F.col("a").alias("v")).distinct(), iterations, _peel)
     if verify_convergence:
         n_before = core.count()
         if n_before > 0:

@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a
+    quarter of the host's physical memory, capped at 8g and at least
+    1g.  In local mode the driver JVM holds every executor thread, and
+    a heap larger than the host can back gets the process killed."""
+    total_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024**3
+    return f"{max(1, min(8, total_gb // 4))}g"
+
+
 def get_spark(
     app_name: str = "newscrawler_spark",
     master: str | None = None,
@@ -23,10 +32,12 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``).  ``shuffle_partitions`` defaults to the local core
-    count — on a real cluster you would size it to ~2-3x total executor
-    cores; the round loop additionally repartitions explicitly at its
-    two shuffle boundaries (salted host fetch, hash-bucketed seen join).
+    ``local[*]``), the driver heap to ``$SPARK_GRAFT_DRIVER_MEM``
+    (falling back to :func:`default_driver_memory`).
+    ``shuffle_partitions`` defaults to the local core count — on a real
+    cluster you would size it to ~2-3x total executor cores; the round
+    loop additionally repartitions explicitly at its two shuffle
+    boundaries (salted host fetch, hash-bucketed seen join).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -53,7 +64,10 @@ def get_spark(
         # memory ~25 MB instead of 120 MB (GC pressure, measured on the
         # crawl bench; the cluster harness uses the same value).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Local-mode scan parallelism: with 32 threads and mid-size files

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.events import epoch_day
+
 
 def windowed_event_counts(
     spark: SparkSession,
@@ -397,9 +399,9 @@ def windowed_daily_cents(
     sum: the streaming maintenance of the daily aggregate the CUSUM
     changepoint detector consumes (operators/events.cusum_over_daily).
     Integer cents (the repo-wide no-raw-double-sum discipline); the
-    day id is the same unix_micros div 86400000000 contract as the
-    batch path, so the streaming sink rows are row-identical to the
-    batch daily aggregate over the finalized horizon."""
+    day id is the batch path's (operators/events.epoch_day), so the
+    streaming sink rows are row-identical to the batch daily aggregate
+    over the finalized horizon."""
     stream = spark.readStream.schema(schema).parquet(events_dir)
     return (
         stream.withWatermark("ts", watermark)
@@ -410,7 +412,7 @@ def windowed_daily_cents(
             .alias("daily_cents")
         )
         .select(
-            F.expr("unix_micros(win.start) div 86400000000")
+            epoch_day("unix_micros(win.start)")
             .cast("long")
             .alias("day"),
             "event_type",

@@ -14,11 +14,6 @@ from newscrawler_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    # The suite's live data is small.  Under the package's 16g driver
-    # default on a 15 GB / 4-vCPU host, ParallelGC grew the test JVM to
-    # 13-15 GB RSS and the kernel OOM-killed it mid-suite; at 6g the
-    # whole suite peaks at ~6.4 GB and runs no slower.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     s = get_spark(app_name="newscrawler_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
 

@@ -366,3 +366,43 @@ def test_mad_anomalies_match_python_medians(spark, sf_dir):
     for r in rows:
         assert r["med"] == med[r["event_type"]]
         assert r["mad"] == mad[r["event_type"]]
+
+
+def test_pre_epoch_day_ids_match_duckdb_twins(spark, tmp_path, sf_dir):
+    """Every Spark-side day id (operators/events.epoch_day) equals the
+    DuckDB twins' ``epoch_us // 86400000000`` on events before 1970
+    that are not on a day boundary, where truncating and flooring
+    division part."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+    from tools.check_oracle import compare
+
+    base = pq.read_table(os.path.join(sf_dir, "events.parquet")).slice(0, 200)
+    rows = base.to_pylist()
+    for i, r in enumerate(rows[:80]):
+        # 1969-12-29 .. 1969-12-31 plus a 1965 day, off the day boundaries
+        r["ts"] = dt.datetime(1969, 12, 29 + i % 3, 1 + i % 22, i % 60, 7)
+        if i % 10 == 0:
+            r["ts"] = dt.datetime(1965, 6, 1, 12, i % 60)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = str(sf / "events.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=base.schema), path)
+
+    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    for name in (
+        "events_pivot",
+        "events_cusum",
+        "events_topk_daily",
+        "events_dau_wau",
+        "events_rolling",
+        "events_retention",
+    ):
+        got = queries[name](spark, str(sf)).toPandas()
+        errs = compare(name, got, con.sql(oracles[name]).df())
+        assert not errs, f"{name}: {errs}"

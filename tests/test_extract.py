@@ -174,7 +174,6 @@ def test_resolve_link():
 def test_corpus_roundtrip_byte_identical(spark, tmp_path_factory):
     """pages.html → Spark mapInPandas extractor → text equals the stored
     ground truth byte-for-byte on every row."""
-    from newscrawler_spark.functions.extract import extract_map_in_pandas
     from newscrawler_spark.sources.corpus import generate_corpus
 
     out = str(tmp_path_factory.mktemp("corpus"))
@@ -220,3 +219,41 @@ def test_corpus_roundtrip_byte_identical(spark, tmp_path_factory):
     for row in some:
         for link in row["out_links"]:
             assert canonicalize_url(link) == link
+
+
+def test_links_kernel_equals_extract_page_out_links(spark, tmp_path):
+    """The links-only mapInPandas kernel the link-graph operators read
+    equals ``extract_page(...)["out_links"]`` on every corpus page —
+    feed pages (capped <link> entries) and puppeteer-strategy pages
+    included — and gives a null-html row no links."""
+    import pyarrow.parquet as pq
+
+    from newscrawler_spark.functions.extract import (
+        JS_RENDER_STRATEGY,
+        LINK_FIELDS,
+        links_map_in_pandas,
+    )
+    from newscrawler_spark.sources.corpus import generate_corpus
+
+    paths = generate_corpus(str(tmp_path / "c"), n_pages=200, n_hosts=6, seed=7)
+    rows = pq.read_table(paths["pages"], columns=["url", "html"]).to_pylist()
+    strategy = {
+        r["domain"]: r["scraper_type"] for r in pq.read_table(paths["seeds"]).to_pylist()
+    }
+    js = {r["url"] for r in rows if strategy.get(r["url"].split("/")[2]) == JS_RENDER_STRATEGY}
+    want = {
+        r["url"]: extract_page(r["html"], r["url"], js_render=r["url"] in js)["out_links"]
+        for r in rows
+    }
+    feeds = [u for u in want if u.endswith("/feed.xml")]
+    assert feeds and all(want[u] for u in feeds)
+    assert js and any(want[u] for u in js)
+    want["https://null.example.com/a.html"] = []
+
+    pages = spark.createDataFrame(
+        [(r["url"], r["html"]) for r in rows] + [("https://null.example.com/a.html", None)],
+        "url string, html binary",
+    )
+    got = pages.mapInPandas(links_map_in_pandas, schema=LINK_FIELDS).collect()
+    assert {r["url"]: list(r["out_links"]) for r in got} == want
+    assert len(got) == len(want)

@@ -566,3 +566,62 @@ def test_seed_depth_matches_pure_python_bfs(spark, tmp_path):
     assert got == dist
     assert all(d == 0 for h, d in got.items() if h in dist and dist[h] == 0)
     assert all(0 <= d <= 4 for d in got.values())
+
+
+def test_host_graph_iterations_cut_lineage_and_release_caches(spark, tmp_path):
+    """PageRank, HITS, label propagation and seed depth leave nothing in
+    the session's cache and at most their result's checkpoint among the
+    persisted RDDs, and each round is cut: LPA's optimized plan is the
+    same size at 2 and at 8 rounds."""
+    from newscrawler_spark.operators.graph import (
+        host_hits,
+        host_label_propagation,
+        host_pagerank,
+        host_seed_depth,
+    )
+    from newscrawler_spark.sources.corpus import generate_corpus
+
+    paths = generate_corpus(str(tmp_path / "c"), n_pages=200, n_hosts=6, seed=9)
+    pages = spark.read.parquet(paths["pages"])
+    seeds = spark.read.parquet(paths["seeds"])
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    for op in (
+        lambda: host_pagerank(pages),
+        lambda: host_hits(pages),
+        lambda: host_label_propagation(pages, iterations=4),
+        lambda: host_seed_depth(pages, seeds, hops=4),
+    ):
+        before = jsc.getPersistentRDDs().size()
+        assert op().collect()
+        assert jsc.getPersistentRDDs().size() <= before + 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def plan_nodes(iterations):
+        df = host_label_propagation(pages, iterations=iterations)
+        return len(df._jdf.queryExecution().optimizedPlan().treeString().splitlines())
+
+    assert plan_nodes(2) == plan_nodes(8)
+
+
+def test_iterate_releases_every_cut_when_a_step_fails(spark):
+    """A failing round leaves none of the iteration's checkpoints — the
+    rounds before it nor the inputs it was handed — among the persisted
+    RDDs."""
+    from newscrawler_spark.operators.graph import _iterate
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    edges = spark.range(10).selectExpr("id AS src", "id + 1 AS dst").localCheckpoint(eager=True)
+    calls = []
+
+    def step(state):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected")
+        return state.join(edges, state["v"] == edges["src"]).selectExpr("dst AS v")
+
+    with pytest.raises(RuntimeError, match="injected"):
+        _iterate(spark.range(3).selectExpr("id AS v"), 5, step, release=(edges,))
+    assert len(calls) == 3
+    assert jsc.getPersistentRDDs().size() <= before
